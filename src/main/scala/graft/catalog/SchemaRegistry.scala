@@ -1,9 +1,9 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, NoSuchFileException, Paths}
 
 import graft.cdc.PathCodec
+import graft.storage.Publish
 import graft.types.{TableDefinition, TableDefJson}
 
 /** Versioned schema registry (SURVEY §1.1(3)): tableVersion → definition,
@@ -48,42 +48,42 @@ object SchemaRegistry {
     new SchemaRegistry(ds.map(d => d.tableVersion -> d).toMap)
   }
 
-  /** Walk an increment root for `{schema}/{table}/{version}/schema.json`
-    * files (local filesystem flavor of S6's storage walk).
+  /** Walk `{incrementRoot}/{schema}/{table}` — the tree the stream
+    * reads, not its sibling tables — for `{version}/schema.json` and
+    * `meta/schema_{ver}_{crc}.json` files (local filesystem flavor of
+    * S6's storage walk). The walk runs once per micro-batch while
+    * publishers and retention write the same tree, so entries that
+    * vanish mid-walk are skipped ([[Publish.walkFiles]]), not fatal.
     *
     * Every file is integrity-checked like `replicate/increment.go:123-135`:
     * the version in the path must equal the version in the content, and
-    * for the meta layout (`schema_{ver}_{crc}.json`) the content's CRC32
-    * must equal the filename's — a truncated or hand-edited schema file
-    * fails loudly instead of silently projecting rows with a wrong
-    * column set. The walk stream is closed (it runs once per micro-batch;
-    * leaking it exhausts file descriptors in a long-running job). */
+    * for the meta layout the content's CRC32 must equal the filename's —
+    * a truncated or hand-edited schema file fails loudly instead of
+    * silently projecting rows with a wrong column set. */
   def loadFromDir(incrementRoot: String, schema: String, table: String): Option[SchemaRegistry] = {
-    val root = Paths.get(incrementRoot)
-    if (!Files.isDirectory(root)) return None
-    val found = scala.util.Using.resource(Files.walk(root)) { walk =>
-      walk.iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .flatMap { p: Path =>
-          PathCodec.parse(p.toString) match {
-            case PathCodec.SchemaFile(s, t, pathVer, _, sumInName) if s == schema && t == table =>
-              val d =
-                try TableDefJson.parse(Files.readString(p))
-                catch {
-                  case e: Exception =>
-                    sys.error(s"corrupt schema file $p: unparseable (${e.getMessage})")
-                }
-              if (d.tableVersion != pathVer)
-                sys.error(s"corrupt schema file $p: path version $pathVer != content version ${d.tableVersion}")
-              sumInName.foreach { want =>
-                if (d.checksum != want)
-                  sys.error(s"corrupt schema file $p: checksum ${d.checksum} != filename checksum $want")
+    val found = Publish.walkFiles(Paths.get(incrementRoot, schema, table)).flatMap { case (p, _) =>
+      PathCodec.parse(p.toString) match {
+        case PathCodec.SchemaFile(s, t, pathVer, _, sumInName) if s == schema && t == table =>
+          val text =
+            try Some(Files.readString(p))
+            catch { case _: NoSuchFileException => None } // deleted since the walk saw it
+          text.map { json =>
+            val d =
+              try TableDefJson.parse(json)
+              catch {
+                case e: Exception =>
+                  sys.error(s"corrupt schema file $p: unparseable (${e.getMessage})")
               }
-              Some(d)
-            case _ => None
+            if (d.tableVersion != pathVer)
+              sys.error(s"corrupt schema file $p: path version $pathVer != content version ${d.tableVersion}")
+            sumInName.foreach { want =>
+              if (d.checksum != want)
+                sys.error(s"corrupt schema file $p: checksum ${d.checksum} != filename checksum $want")
+            }
+            d
           }
-        }
-        .toSeq
+        case _ => None
+      }
     }
     if (found.isEmpty) None else Some(fromDefinitions(found))
   }

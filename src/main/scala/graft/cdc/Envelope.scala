@@ -20,7 +20,6 @@ object Envelope {
   val TableCol_ = "tidb2dw_tablename"
   val SchemaCol = "tidb2dw_schemaname"
   val CommitTsCol = "tidb2dw_commit_ts"
-  val MetaCols: Seq[String] = Seq(FlagCol, TableCol_, SchemaCol, CommitTsCol)
 
   val Insert = "I"
   val Update = "U"
@@ -36,15 +35,6 @@ object Envelope {
     "escape" -> "\\",
     "nullValue" -> "\\N",
     "mode" -> "PERMISSIVE")
-
-  /** Envelope schema for a table: 4 metadata cols + typed data columns. */
-  def schemaFor(dataCols: Seq[TableCol]): StructType = StructType(
-    Seq(
-      StructField(FlagCol, StringType, nullable = false),
-      StructField(TableCol_, StringType, nullable = true),
-      StructField(SchemaCol, StringType, nullable = true),
-      StructField(CommitTsCol, LongType, nullable = false)
-    ) ++ dataCols.map(TidbTypeMapper.toStructField))
 
   /** Read-time envelope schema: everything as string (CSV-faithful), cast
     * applied per-column afterwards — the Databricks connector's
@@ -210,7 +200,4 @@ object Envelope {
   /** P4 table filter: keep only this session's {schema, table} events. */
   def tableFilter(df: DataFrame, schema: String, table: String): DataFrame =
     df.filter(col(SchemaCol) === schema && col(TableCol_) === table)
-
-  /** Drop the envelope, leaving the row image. */
-  def dataOnly(df: DataFrame): DataFrame = df.drop(MetaCols: _*)
 }

@@ -61,8 +61,6 @@ object PathCodec {
   def schemaPath(root: String, schema: String, table: String, version: Long): String =
     s"$root/$schema/$table/$version/schema.json"
 
-  def checkpointPath(dataFile: String): String = s"$dataFile.checkpoint"
-
   /** T1 `diffDMLMaps` (`replicate/increment.go:171-190`): per key, the
     * range of file indices not yet processed. */
   def diffIndexMaps(

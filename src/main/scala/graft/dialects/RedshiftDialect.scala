@@ -139,8 +139,4 @@ WHERE
   }
 
   def dropTableIfExistsSql(tableName: String): String = s"DROP TABLE IF EXISTS $tableName"
-
-  /** `pkg/redshiftsql/sql.go:19-28` CreateSchema. */
-  def createSchemaSql(schemaName: String): Seq[String] =
-    Seq(s"CREATE SCHEMA IF NOT EXISTS $schemaName", s"SET search_path TO $schemaName")
 }

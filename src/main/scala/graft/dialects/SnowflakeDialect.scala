@@ -130,15 +130,6 @@ WHEN MATCHED AND S.METADATA$$FLAG = 'D' THEN DELETE
 WHEN NOT MATCHED AND S.METADATA$$FLAG != 'D' THEN INSERT ($insertStat) VALUES ($valuesStat);""")
   }
 
-  /** `pkg/snowsql/sql.go:18-36` CreateExternalStage: CSV file format with
-    * `\N` nulls, quote-optional fields, backslash escape, hex binary. */
-  def createStageSql(stageName: String, url: String): String =
-    s"""CREATE OR REPLACE STAGE $stageName
-URL = '$url'
-FILE_FORMAT = (type = 'CSV' EMPTY_FIELD_AS_NULL = FALSE NULL_IF=('\\\\N') FIELD_OPTIONALLY_ENCLOSED_BY='"' ESCAPE='\\\\' BINARY_FORMAT = 'HEX');"""
-
-  def dropStageSql(stageName: String): String = s"DROP STAGE IF EXISTS $stageName;"
-
   /** `pkg/snowsql/sql.go:52-66` LoadSnapshotFromStage. */
   def copyIntoSql(targetTable: String, stageName: String, filePath: String): String =
     s"""COPY INTO $targetTable

@@ -1,11 +1,11 @@
 package graft.snapshot
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-import scala.util.Using
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+
+import graft.storage.Publish
 
 /** Deterministic sharded export for training-data consumption — the last
   * stage of the LLM-pipeline surface: a filtered corpus lands as N
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * incremental refresh) and the assignment needs no global sort or
   * sampling pass. `repartition(n, shard)` gives one task per shard
   * (balanced by the same hash), `partitionBy(shard)` makes each shard a
-  * self-describing directory; write + manifest commit through a tmp-dir
-  * rename, the same atomic-swap protocol as [[TargetTable]].
+  * self-describing directory; write + manifest commit through
+  * [[graft.storage.Publish.replaceDir]], the seam [[TargetTable]] lands
+  * through too.
   */
 object ShardedExport {
 
@@ -44,26 +45,15 @@ object ShardedExport {
       format: String = "parquet"): Manifest = {
     require(numShards > 0, s"numShards must be positive: $numShards")
     require(Set("parquet", "json").contains(format), s"unsupported format: $format")
-    val root = Paths.get(outDir)
-    Files.createDirectories(root.getParent match { case null => root; case p => p })
-    val tmp = root.resolveSibling(root.getFileName.toString + ".tmp")
-    deleteRecursively(tmp)
-    val sharded = df.withColumn(ShardCol, shardExpr(keyCol, numShards))
-    sharded
-      .repartition(numShards, col(ShardCol))
-      .write.partitionBy(ShardCol).mode(SaveMode.Overwrite)
-      .format(format).save(tmp.toString)
-    // per-shard counts from the written files (counts what actually
-    // landed, not what the plan intended)
-    val spark = df.sparkSession
-    val counts = spark.read.format(format).load(tmp.toString)
-      .groupBy(col(ShardCol)).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val manifest = Manifest(numShards, counts.values.sum, counts)
-    Files.writeString(tmp.resolve("_manifest.json"), renderManifest(manifest))
-    deleteRecursively(root)
-    Files.move(tmp, root, StandardCopyOption.ATOMIC_MOVE)
-    manifest
+    Publish.replaceDir(Paths.get(outDir)) { tmp =>
+      df.withColumn(ShardCol, shardExpr(keyCol, numShards))
+        .repartition(numShards, col(ShardCol))
+        .write.partitionBy(ShardCol).mode(SaveMode.Overwrite)
+        .format(format).save(tmp.toString)
+      // per-shard counts from the written files (counts what actually
+      // landed, not what the plan intended)
+      writeManifest(df.sparkSession.read.format(format).load(tmp.toString), numShards, tmp)
+    }.get
   }
 
   // --- epoch-seeded training shuffle -----------------------------------
@@ -90,28 +80,29 @@ object ShardedExport {
   def writeEpochShuffle(df: DataFrame, keyCol: String, outDir: String,
       numShards: Int, epoch: Long): Manifest = {
     require(numShards > 0, s"numShards must be positive: $numShards")
-    val root = Paths.get(outDir)
-    Files.createDirectories(root.getParent match { case null => root; case p => p })
-    val tmp = root.resolveSibling(root.getFileName.toString + ".tmp")
-    deleteRecursively(tmp)
     val skey = epochKeyExpr(keyCol, epoch)
-    df.withColumn("_skey", skey)
-      .withColumn(ShardCol, pmod(col("_skey"), lit(numShards)))
-      // the partition column leads the sort so the file writer's
-      // required ordering is already satisfied — otherwise it inserts
-      // its own sort by _shard alone and discards the epoch-key order
-      .repartition(numShards, col(ShardCol))
-      .sortWithinPartitions(col(ShardCol), col("_skey"), col(keyCol))
-      .write.partitionBy(ShardCol).mode(SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    val spark = df.sparkSession
-    val counts = spark.read.parquet(tmp.toString)
+    Publish.replaceDir(Paths.get(outDir)) { tmp =>
+      df.withColumn("_skey", skey)
+        .withColumn(ShardCol, pmod(col("_skey"), lit(numShards)))
+        // the partition column leads the sort so the file writer's
+        // required ordering is already satisfied — otherwise it inserts
+        // its own sort by _shard alone and discards the epoch-key order
+        .repartition(numShards, col(ShardCol))
+        .sortWithinPartitions(col(ShardCol), col("_skey"), col(keyCol))
+        .write.partitionBy(ShardCol).mode(SaveMode.Overwrite)
+        .parquet(tmp.toString)
+      writeManifest(df.sparkSession.read.parquet(tmp.toString), numShards, tmp)
+    }.get
+  }
+
+  /** Count the rows per shard of a written export and write its
+    * `_manifest.json` into `dir`. */
+  private def writeManifest(written: DataFrame, numShards: Int, dir: Path): Manifest = {
+    val counts = written
       .groupBy(col(ShardCol)).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val manifest = Manifest(numShards, counts.values.sum, counts)
-    Files.writeString(tmp.resolve("_manifest.json"), renderManifest(manifest))
-    deleteRecursively(root)
-    Files.move(tmp, root, StandardCopyOption.ATOMIC_MOVE)
+    Files.writeString(dir.resolve("_manifest.json"), renderManifest(manifest))
     manifest
   }
 
@@ -135,11 +126,5 @@ object ShardedExport {
     val per = m.rowsPerShard.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
     s"""{"num_shards": ${m.numShards}, "total_rows": ${m.totalRows}, "rows_per_shard": $per}"""
-  }
-
-  private[graft] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Using.resource(Files.list(p))(_.iterator().asScala.toList).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 }

@@ -1,8 +1,6 @@
 package graft.snapshot
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-import scala.util.Using
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{base64, col, hex, lower, unbase64, unhex}
@@ -10,6 +8,7 @@ import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructTy
 
 import graft.types.{TableDefinition, TableDefJson, TidbTypeMapper}
 import graft.cdc.Envelope
+import graft.storage.Publish
 
 /** Snapshot (bulk) load stage — S1/S7/S8/S11 of SURVEY §2.1.
   *
@@ -72,27 +71,21 @@ object SnapshotLoader {
       case StructField(n, BinaryType, _, _) => lower(hex(col(n))).as(n)
       case f => col(f.name)
     }: _*)
-    val tmp = Paths.get(snapshotDir, ".tmp_export")
+    val tmp = Publish.tmpFor(Paths.get(snapshotDir, s"${d.schema}.${d.table}"))
     wire.write.options(Envelope.csvOptions).mode(SaveMode.Overwrite).csv(tmp.toString)
-    val parts = Using.resource(Files.list(tmp)) { s =>
-      s.iterator().asScala.filter(_.getFileName.toString.endsWith(".csv")).toSeq
-    }.sortBy(_.getFileName.toString)
+    val parts = Publish.listDir(tmp)
+      .filter(_.getFileName.toString.endsWith(".csv"))
+      .sortBy(_.getFileName.toString)
     val out = parts.zipWithIndex.map { case (p, i) =>
       val name = f"${d.schema}.${d.table}.$i%09d.csv"
       Files.move(p, Paths.get(snapshotDir, name), StandardCopyOption.REPLACE_EXISTING)
       name
     }
-    deleteRecursively(tmp)
+    Publish.deleteRecursively(tmp)
     Files.writeString(Paths.get(snapshotDir, s"${d.schema}.${d.table}-schema.json"),
       TableDefJson.write(d))
-    Files.writeString(Paths.get(snapshotDir, "metadata"), s"export finished: ${out.size} chunks")
+    Publish.replaceFile(Paths.get(snapshotDir, "metadata"), s"export finished: ${out.size} chunks")
     out
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Using.resource(Files.list(p))(_.iterator().asScala.toList).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 
   def loadinfoPath(snapshotDir: String, d: TableDefinition): String =
@@ -111,7 +104,7 @@ object SnapshotLoader {
       d: TableDefinition): Boolean = {
     if (isLoaded(snapshotDir, d)) return false
     target.writeVersion(snapshot, "snapshot")
-    Files.writeString(Paths.get(loadinfoPath(snapshotDir, d)), "loaded")
+    Publish.replaceFile(Paths.get(loadinfoPath(snapshotDir, d)), "loaded")
     true
   }
 }

@@ -1,10 +1,11 @@
 package graft.snapshot
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.util.Using
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.storage.Publish
 
 /** A MERGE-capable managed table over plain parquet: versioned data dirs
   * plus a `_current` pointer, giving atomic swap, crash safety and
@@ -43,60 +44,29 @@ final class TargetTable(
   // ONE writer; two writers landing the same table concurrently (a
   // stream plus a manual merge, or two misconfigured streams) would
   // interleave tmp dirs, history lines and pointer swaps. Every
-  // mutating entry point therefore takes an exclusive lease: an atomic
-  // create of `_lease` naming the owner. A second live writer FAILS
-  // LOUDLY at acquisition instead of racing; a lease left by a dead
-  // process (crash while holding — the release in `finally` never ran)
-  // expires by mtime age and is stolen, so a crashed driver cannot
-  // block its own replacement. Cost: two file ops per commit.
+  // mutating entry point therefore takes an exclusive lease: a
+  // `Publish.claim` of `_lease` naming the owner. A second live writer
+  // FAILS LOUDLY at acquisition instead of racing; a lease left by a
+  // dead process (crash while holding — the release in `finally` never
+  // ran) expires by mtime age and is stolen, so a crashed driver cannot
+  // block its own replacement. Cost: a handful of file ops per commit.
 
   private val ownerId = java.util.UUID.randomUUID().toString
 
   private def leasePath = rootPath.resolve("_lease")
 
-  private def tryClaim(): Boolean = {
-    val tmp = rootPath.resolve(s"_lease.${ownerId.take(8)}.tmp")
-    Files.writeString(tmp, s"$ownerId ${System.currentTimeMillis()}")
-    try { Files.move(tmp, leasePath); true } // no REPLACE: loses to a live holder
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp); false
-    }
-  }
-
   private def acquireLease(): Unit = {
-    Files.createDirectories(rootPath)
-    if (tryClaim()) return
-    val stale =
-      try System.currentTimeMillis() -
-        Files.getLastModifiedTime(leasePath).toMillis > leaseTtlMs
-      catch { case _: java.nio.file.NoSuchFileException => true } // holder just released
-    if (stale) {
-      // dead holder: steal once; a rival stealer winning the re-claim
-      // leaves us on the loud-failure path below, which is correct
-      Files.deleteIfExists(leasePath)
-      if (tryClaim()) return
-    }
-    val holder =
-      try Files.readString(leasePath).trim.split(" ").headOption.getOrElse("unknown")
-      catch { case _: Exception => "unknown" }
+    if (Publish.claim(leasePath, ownerId, leaseTtlMs)) return
+    val holder = Publish.claimOwner(leasePath).getOrElse("unknown")
     sys.error(s"target table $root is held by another writer (lease owner " +
       s"$holder): concurrent writers would race the tmp→swap commit; " +
       s"stop the other writer or wait out the ${leaseTtlMs / 1000} s lease TTL")
   }
 
-  private def releaseLease(): Unit =
-    try {
-      if (Files.exists(leasePath) && Files.readString(leasePath).startsWith(ownerId)) {
-        Files.deleteIfExists(leasePath)
-        ()
-      }
-    } catch { case _: Exception => () }
-
   /** Run one mutating commit under the exclusive writer lease. */
   private def withLease[A](f: => A): A = {
     acquireLease()
-    try f finally releaseLease()
+    try f finally Publish.release(leasePath, ownerId)
   }
 
   def exists: Boolean = Files.exists(pointer)
@@ -173,24 +143,18 @@ final class TargetTable(
     * (idempotence marker M2-style). Returns true if written. */
   def writeVersion(df: DataFrame, v: String): Boolean = withLease {
     checkBucketSpec()
-    val dest = rootPath.resolve(s"data_$v")
-    if (Files.exists(dest)) {
-      repoint(s"data_$v")
-      false
-    } else {
-      val tmp = rootPath.resolve(s".tmp_$v")
+    val landed = Publish.landDirOnce(rootPath.resolve(s"data_$v")) { tmp =>
       val writer =
         if (bucketed) df.withColumn(BucketCol, bucketExpr).write.partitionBy(BucketCol)
         else df.write
       writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      // crash point: version fully written under .tmp_, nothing
+      // crash point: version fully written under a hidden tmp, nothing
       // published — readers must keep serving the current version and a
-      // retry must land cleanly over the orphan (Overwrite on the tmp)
+      // retry must land cleanly beside the orphan (which gc then sweeps)
       graft.tools.Failpoints.hit("target.before-move")
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-      repoint(s"data_$v")
-      true
     }
+    repoint(s"data_$v")
+    landed.isDefined
   }
 
   /** Partition-scoped merge commit: `merged` is the new content of the
@@ -200,33 +164,27 @@ final class TargetTable(
     if (!bucketed) return writeVersion(merged, v)
     withLease {
       checkBucketSpec()
-      val dest = rootPath.resolve(s"data_$v")
-      if (Files.exists(dest)) {
-        repoint(s"data_$v")
-        false
-      } else {
+      val landed = Publish.landDirOnce(rootPath.resolve(s"data_$v")) { tmp =>
         val prev = currentDir
-        val tmp = rootPath.resolve(s".tmp_$v")
         merged.withColumn(BucketCol, bucketExpr).write
           .partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
         val touchedSet = touched.map(k => s"$BucketCol=$k").toSet
-        listDir(prev)
+        Publish.listDir(prev)
           .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$BucketCol="))
           .filterNot(p => touchedSet.contains(p.getFileName.toString))
           .foreach { bucketDir =>
             val destBucket = tmp.resolve(bucketDir.getFileName.toString)
             Files.createDirectories(destBucket)
-            listDir(bucketDir).filter(Files.isRegularFile(_)).foreach { f =>
-              linkOrCopy(f, destBucket.resolve(f.getFileName.toString))
+            Publish.listDir(bucketDir).filter(Files.isRegularFile(_)).foreach { f =>
+              Publish.linkOrCopy(f, destBucket.resolve(f.getFileName.toString))
             }
           }
         // crash point: merged buckets written + carryover links laid, not
         // yet swapped — the same invariant as writeVersion's gap
         graft.tools.Failpoints.hit("target.before-move")
-        Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-        repoint(s"data_$v")
-        true
       }
+      repoint(s"data_$v")
+      landed.isDefined
     }
   }
 
@@ -234,11 +192,11 @@ final class TargetTable(
     * trigger signal. Driver-side metadata only (≤ numBuckets entries). */
   def bucketFileCounts: Map[Int, Int] = {
     require(bucketed, "bucketFileCounts on an unbucketed table")
-    listDir(currentDir)
+    Publish.listDir(currentDir)
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$BucketCol="))
       .map { d =>
         val b = d.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
-        b -> listDir(d).count { f =>
+        b -> Publish.listDir(d).count { f =>
           val n = f.getFileName.toString
           Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
         }
@@ -267,21 +225,13 @@ final class TargetTable(
     * metrics, reference `pkg/metrics/metrics.go:14-79`). */
   def currentSizeBytes: Long = {
     if (!exists) return 0L
-    def walk(p: Path): Long =
-      if (Files.isDirectory(p)) listDir(p).map(walk).sum
-      else Files.size(p)
-    walk(currentDir)
+    Publish.walkFiles(currentDir).map(_._2).sum
   }
 
   /** Small stage markers beside the data (loadinfo / schema-version
     * analogs of the reference's storage markers, SURVEY §2.9 M7). */
-  def writeMarker(name: String, value: String): Unit = {
-    Files.createDirectories(rootPath)
-    val tmp = rootPath.resolve(s"_$name.tmp")
-    Files.writeString(tmp, value)
-    Files.move(tmp, rootPath.resolve(s"_$name"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeMarker(name: String, value: String): Unit =
+    Publish.replaceFile(rootPath.resolve(s"_$name"), value)
 
   def readMarker(name: String): Option[String] = {
     val p = rootPath.resolve(s"_$name")
@@ -301,22 +251,6 @@ final class TargetTable(
     }
   }
 
-  private def linkOrCopy(src: Path, dst: Path): Unit =
-    try Files.createLink(dst, src)
-    catch {
-      case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(src, dst, StandardCopyOption.COPY_ATTRIBUTES)
-    }
-
-  /** Materialized, stream-closed directory listing (a leaked
-    * `Files.list` stream per micro-batch exhausts file descriptors in a
-    * long-running job). */
-  private def listDir(p: Path): Seq[Path] =
-    Using.resource(Files.list(p)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.toList
-    }
-
   private def repoint(dir: String): Unit = {
     // commit order is recorded explicitly (_history, newest last) so gc
     // never depends on filesystem mtimes — mtime ordering ties/races on
@@ -324,28 +258,23 @@ final class TargetTable(
     // delete the version an in-flight reader still holds.
     val hist = readMarker("history").map(_.split("\n").toSeq).getOrElse(Nil)
     writeMarker("history", ((hist.filterNot(_ == dir) :+ dir).takeRight(8)).mkString("\n"))
-    val tmp = rootPath.resolve("_current.tmp")
-    Files.writeString(tmp, dir)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeMarker("current", dir)
     gc(keep = 2)
   }
 
   /** Drop all but the newest `keep` data versions by COMMIT order (old
     * images are only needed for in-flight readers). Hard-linked files
-    * stay valid in newer versions when an old version is deleted. */
+    * stay valid in newer versions when an old version is deleted. Runs
+    * under the writer lease, so any version tmp still on disk belongs
+    * to a crashed attempt and is swept too. */
   private def gc(keep: Int): Unit = {
     val hist = readMarker("history").map(_.split("\n").toSeq).getOrElse(Nil)
     val keepSet = hist.takeRight(keep).toSet + currentVersion.getOrElse("")
-    listDir(rootPath)
+    Publish.listDir(rootPath)
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("data_"))
       .filterNot(p => keepSet.contains(p.getFileName.toString))
-      .foreach(deleteRecursively)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+      .foreach(Publish.deleteRecursively)
+    Publish.tmpsOf(rootPath, "data_").foreach(Publish.deleteRecursively)
   }
 }
 

@@ -9,6 +9,7 @@ import graft.catalog.{SchemaEvolution, SchemaRegistry}
 import graft.cdc.{Envelope, PathCodec}
 import graft.merge.ChangeApply
 import graft.snapshot.TargetTable
+import graft.storage.Publish
 import graft.types.TableDefinition
 
 /** The streaming core (SURVEY §2.9 / `replicate/increment.go` rethought
@@ -313,8 +314,8 @@ final class IncrementalPipeline(
     }
     // pending = discovered CDC bytes not yet merged — the reference
     // recomputes this on every poll tick the same way
-    // (`replicate/increment.go:214-217`); the walk is the one we already
-    // pay for the schema registry.
+    // (`replicate/increment.go:214-217`), walking the same
+    // `{schema}/{table}` tree the schema registry walks.
     val totalBytes = walkCdcBytes()
     metrics.set(metrics.Names.IncrementPendingBytes, cfg.tableName,
       math.max(0L, totalBytes - metrics.get(metrics.Names.IncrementLoadedBytes, cfg.tableName)))
@@ -370,19 +371,15 @@ final class IncrementalPipeline(
     * nothing — absence reads as zero. Returns the rows landed (0 on
     * replay or all-clean). */
   private def landQuarantine(bad: org.apache.spark.sql.DataFrame, vId: String): Long = {
-    val qRoot = java.nio.file.Paths.get(cfg.quarantineDir.get)
-    val dest = qRoot.resolve(s"version=$vId")
+    val dest = java.nio.file.Paths.get(cfg.quarantineDir.get, s"version=$vId")
     if (java.nio.file.Files.exists(dest)) return 0L // replayed version
     // cheap probe on the cached parse — the common all-clean tick pays
     // one limit-1 job, never a write
     if (bad.isEmpty) return 0L
-    java.nio.file.Files.createDirectories(qRoot)
-    val tmp = qRoot.resolve(s".tmp_$vId")
-    bad.write.mode("overwrite").parquet(tmp.toString)
-    val n = spark.read.parquet(tmp.toString).count()
-    java.nio.file.Files.move(tmp, dest,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    n
+    Publish.landDirOnce(dest) { tmp =>
+      bad.write.mode("overwrite").parquet(tmp.toString)
+      spark.read.parquet(tmp.toString).count()
+    }.getOrElse(0L)
   }
 
   /** Every quarantined row across all landed versions —
@@ -397,18 +394,10 @@ final class IncrementalPipeline(
     spark.read.parquet(qRoot)
   }
 
-  private def walkCdcBytes(): Long = {
-    val root = java.nio.file.Paths.get(cfg.incrementRoot, cfg.schemaName, cfg.tableName)
-    if (!java.nio.file.Files.isDirectory(root)) return 0L
-    scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) &&
-          p.getFileName.toString.matches("CDC.*\\.csv"))
-        .map(p => java.nio.file.Files.size(p))
-        .sum
-    }
-  }
+  private def walkCdcBytes(): Long =
+    Publish.walkFiles(java.nio.file.Paths.get(cfg.incrementRoot, cfg.schemaName, cfg.tableName))
+      .collect { case (p, size) if p.getFileName.toString.matches("CDC.*\\.csv") => size }
+      .sum
 
   private def fileSize(path: String): Long =
     try {

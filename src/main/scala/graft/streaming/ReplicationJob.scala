@@ -123,8 +123,4 @@ object ReplicationJob {
     api.start()
     (api, replicateTables(spark, jobs, Cloud, status, metrics))
   }
-
-  /** Block until every table's stream terminates (normally or not). */
-  def awaitAll(handles: Seq[TableHandle]): Unit =
-    handles.flatMap(_.query).foreach(_.awaitTermination())
 }

@@ -66,24 +66,15 @@ object StreamQuality {
         // dead-letter exactly-once: a redelivered micro-batch after a
         // crash/restart must not append the same violations twice. Each
         // epoch lands ONCE under its own `epoch=<id>` partition dir via
-        // tmp-write → atomic-rename (the sharded-export protocol): a
+        // tmp-write → atomic-rename (`Publish.landDirOnce`): a
         // completed prior attempt is skipped, a crashed partial attempt
         // only ever exists under the hidden tmp name readers ignore.
-        val root = java.nio.file.Paths.get(quarantineDir)
-        val dest = root.resolve(s"epoch=$epochId")
-        if (!java.nio.file.Files.exists(dest)) {
-          val tmp = root.resolve(
-            s".epoch-$epochId-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+        graft.storage.Publish.landDirOnce(
+            java.nio.file.Paths.get(quarantineDir, s"epoch=$epochId")) { tmp =>
           bad
             .withColumn("_rules_fired", concat_ws(",",
               rules.map(r => when(coalesce(r.violation, lit(false)), r.name)): _*))
             .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          try java.nio.file.Files.move(tmp, dest,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              graft.snapshot.ShardedExport.deleteRecursively(tmp) // lost a tie — epoch already landed
-          }
         }
       }
       downstream(cached.filter(!anyViolation(rules)), epochId)

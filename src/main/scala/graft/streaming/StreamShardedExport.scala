@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-import scala.util.Using
+import java.nio.file.{Files, Path, Paths}
 
 import graft.tools.Failpoints
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -10,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.snapshot.ShardedExport
+import graft.storage.Publish
 
 /** Continuous exactly-once training-data export — the streaming face of
   * [[graft.snapshot.ShardedExport]]: documents append to the hash-sharded
@@ -70,10 +69,11 @@ object StreamShardedExport {
     * driver's in-flight attempt can't have its output deleted or
     * interleaved by the new driver (cross-driver serialization itself
     * rests on Structured Streaming's one-active-query-per-checkpoint
-    * lock; the marker re-check below closes the loser's window); the
-    * marker is published by ATOMIC_MOVE of a fully-written tmp file —
-    * a crash mid-write can never leave a truncated marker that reads
-    * as a valid commit. */
+    * lock; the marker re-check before the data swap closes the loser's
+    * window); the marker is created exactly once from a fully-written
+    * tmp file ([[Publish.createFileOnce]]) — a crash mid-write can never
+    * leave a truncated marker that reads as a valid commit, and a
+    * losing attempt cannot overwrite the winner's. */
   def commitBatch(batch: DataFrame, keyCol: String, outDir: String,
       numShards: Int, epochId: Long): Boolean =
     commitWithShards(
@@ -93,52 +93,34 @@ object StreamShardedExport {
     val root = Paths.get(outDir)
     val marker = markerPath(root, epochId)
     if (Files.exists(marker)) return false // exactly-once: already landed
-    Files.createDirectories(root)
-    Files.createDirectories(marker.getParent)
 
-    def publishMarker(counts: Map[Int, Long]): Boolean = {
-      val per = counts.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": $v""" }
-        .mkString("{", ", ", "}")
-      val markerTmp = marker.resolveSibling(
-        s".${epochId}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      Files.writeString(markerTmp,
-        s"""{"epoch": $epochId, "total_rows": ${counts.values.sum}, "rows_per_shard": $per}""")
-      try {
-        Files.move(markerTmp, marker, StandardCopyOption.ATOMIC_MOVE)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(markerTmp); false // concurrent attempt won
-      }
-    }
+    def publishMarker(counts: Map[Int, Long]): Boolean =
+      Publish.createFileOnce(marker,
+        s"""{"epoch": $epochId, "total_rows": ${counts.values.sum}, "rows_per_shard": ${renderCounts(counts)}}""")
 
     if (batch.isEmpty) return publishMarker(Map.empty) // marker-only commit
 
-    val dest = root.resolve(s"batch=$epochId")
-    val tmp = root.resolve(
-      s".batch-$epochId-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    batch
-      .repartition(numShards, col(ShardCol))
-      .write.partitionBy(ShardCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // crash point: shard files fully written, nothing published — the
-    // orphan .tmp dir must be invisible to readers and harmless to the
-    // replay (which writes its own attempt-unique tmp)
-    Failpoints.hit("sharded.after-tmp-write")
-    // count what actually landed, then publish: rename data, marker LAST
-    val counts = batch.sparkSession.read.schema(batch.schema)
-      .parquet(tmp.toString)
-      .groupBy(col(ShardCol)).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (Files.exists(marker)) { // concurrent attempt committed while we wrote
-      ShardedExport.deleteRecursively(tmp)
-      return false
+    // the replace drops an orphan dest from a crash before the marker
+    // write; a marker that appeared while this attempt wrote means a
+    // concurrent attempt committed, and this one backs off
+    val written = Publish.replaceDir(root.resolve(s"batch=$epochId"),
+        unless = Files.exists(marker)) { tmp =>
+      batch
+        .repartition(numShards, col(ShardCol))
+        .write.partitionBy(ShardCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
+      // crash point: shard files fully written, nothing published — the
+      // orphan tmp dir must be invisible to readers and harmless to the
+      // replay (which writes its own attempt-unique tmp)
+      Failpoints.hit("sharded.after-tmp-write")
+      // count what actually landed; the marker is published LAST
+      shardCounts(batch.sparkSession.read.schema(batch.schema).parquet(tmp.toString))
     }
-    ShardedExport.deleteRecursively(dest) // orphan from a crash before the marker write
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-    // crash point: data renamed into place but NO marker — readers must
-    // still exclude it, and the replay must overwrite the orphan dest
-    Failpoints.hit("sharded.before-marker")
-    publishMarker(counts)
+    written.exists { counts =>
+      // crash point: data renamed into place but NO marker — readers must
+      // still exclude it, and the replay must overwrite the orphan dest
+      Failpoints.hit("sharded.before-marker")
+      publishMarker(counts)
+    }
   }
 
   /** Every COMMITTED row (uncommitted orphans excluded), bookkeeping
@@ -229,65 +211,39 @@ object StreamShardedExport {
     // doesn't match the on-disk data. The loser backs off at the claim.
     // A claim left by a crashed compactor expires after ClaimTtlMs so a
     // dead process can't block compaction forever.
-    if (!claimGeneration(root, gen)) return None
+    val claim = root.resolve(s".compact-$gen.claim")
+    val owner = java.util.UUID.randomUUID().toString
+    if (!Publish.claim(claim, owner, ClaimTtlMs)) return None
     try {
       if (Files.exists(marker)) return None // this gen already published
-      val dest = root.resolve(s"batch=compact-$gen")
-      val tmp = root.resolve(
-        s".compact-$gen-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      spark.read.option("basePath", outDir).parquet(dataDirs.map(_.toString): _*)
-        .drop("batch")
-        .repartition(numShards, col(ShardCol))
-        .write.partitionBy(ShardCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val counts = spark.read.parquet(tmp.toString)
-        .groupBy(col(ShardCol)).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      ShardedExport.deleteRecursively(dest)
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-      val per = counts.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": $v""" }
-        .mkString("{", ", ", "}")
-      val markerTmp = marker.resolveSibling(
-        s".compact-$gen.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      Files.writeString(markerTmp,
+      val counts = Publish.replaceDir(root.resolve(s"batch=compact-$gen")) { tmp =>
+        spark.read.option("basePath", outDir).parquet(dataDirs.map(_.toString): _*)
+          .drop("batch")
+          .repartition(numShards, col(ShardCol))
+          .write.partitionBy(ShardCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
+        shardCounts(spark.read.parquet(tmp.toString))
+      }.get
+      val published = Publish.createFileOnce(marker,
         s"""{"gen": $gen, "folds": ${batches.mkString("[", ", ", "]")}, """ +
           s""""folds_gens": ${gens.mkString("[", ", ", "]")}, """ +
-          s""""total_rows": ${counts.values.sum}, "rows_per_shard": $per}""")
-      try Files.move(markerTmp, marker, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(markerTmp); return None
-      }
+          s""""total_rows": ${counts.values.sum}, "rows_per_shard": ${renderCounts(counts)}}""")
+      if (!published) return None
       if (gc) gcFolded(outDir)
       Some(gen)
-    } finally {
-      Files.deleteIfExists(claimPath(root, gen))
-      ()
-    }
+    } finally Publish.release(claim, owner)
   }
 
   /** How long a generation claim blocks rival compactors before it is
     * presumed crashed and stolen. */
   private[graft] val ClaimTtlMs = 30L * 60 * 1000
 
-  private def claimPath(root: Path, gen: Long): Path =
-    root.resolve(s".compact-$gen.claim")
+  /** Rows per shard of a written tmp — ≤ numShards rows to the driver. */
+  private def shardCounts(written: DataFrame): Map[Int, Long] =
+    written.groupBy(col(ShardCol)).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-  /** Atomically claim generation `gen`; false when a LIVE rival holds
-    * it. A claim older than [[ClaimTtlMs]] is stolen (single retry). */
-  private def claimGeneration(root: Path, gen: Long): Boolean = {
-    val claim = claimPath(root, gen)
-    def tryCreate(): Boolean =
-      try { Files.createFile(claim); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (tryCreate()) return true
-    val stale =
-      try System.currentTimeMillis() -
-        Files.getLastModifiedTime(claim).toMillis > ClaimTtlMs
-      catch { case _: java.nio.file.NoSuchFileException => true } // rival just released
-    if (!stale) return false
-    Files.deleteIfExists(claim)
-    tryCreate()
-  }
+  private def renderCounts(counts: Map[Int, Long]): String =
+    counts.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
 
   /** Sweep directories and markers of every folded commit — idempotent,
     * safe to re-run after any crash (visibility never depends on it). */
@@ -295,11 +251,11 @@ object StreamShardedExport {
     val root = Paths.get(outDir)
     val (foldedBatches, foldedGens) = foldedCommits(outDir)
     foldedBatches.foreach { id =>
-      ShardedExport.deleteRecursively(root.resolve(s"batch=$id"))
+      Publish.deleteRecursively(root.resolve(s"batch=$id"))
       Files.deleteIfExists(markerPath(root, id))
     }
     foldedGens.foreach { g =>
-      ShardedExport.deleteRecursively(root.resolve(s"batch=compact-$g"))
+      Publish.deleteRecursively(root.resolve(s"batch=compact-$g"))
       Files.deleteIfExists(compactMarkerPath(root, g))
     }
   }
@@ -329,7 +285,7 @@ object StreamShardedExport {
   def committedGenerations(outDir: String): Seq[Long] = {
     val dir = Paths.get(outDir, "_committed")
     if (!Files.isDirectory(dir)) return Seq.empty
-    Using.resource(Files.list(dir))(_.iterator().asScala.toList)
+    Publish.listDir(dir)
       .map(_.getFileName.toString)
       .collect { case GenMarkerName(g) => g.toLong }
       .sorted
@@ -343,7 +299,7 @@ object StreamShardedExport {
   def committedEpochs(outDir: String): Seq[Long] = {
     val dir = Paths.get(outDir, "_committed")
     if (!Files.isDirectory(dir)) return Seq.empty
-    Using.resource(Files.list(dir))(_.iterator().asScala.toList)
+    Publish.listDir(dir)
       .map(_.getFileName.toString)
       // digits-only: a stray foo.json or editor artifact must not make
       // every read of a healthy export throw

@@ -49,22 +49,10 @@ object StreamSourceStats {
   }
 
   /** Land one epoch's partials idempotently; true if this call wrote. */
-  private[graft] def commitEpoch(batch: DataFrame, outDir: String, epochId: Long): Boolean = {
-    val root = java.nio.file.Paths.get(outDir)
-    val dest = root.resolve(s"epoch=$epochId")
-    if (java.nio.file.Files.exists(dest)) return false // redelivery
-    val tmp = root.resolve(
-      s".epoch-$epochId-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    partials(batch).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    try {
-      java.nio.file.Files.move(tmp, dest,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        graft.snapshot.ShardedExport.deleteRecursively(tmp); false
-    }
-  }
+  private[graft] def commitEpoch(batch: DataFrame, outDir: String, epochId: Long): Boolean =
+    graft.storage.Publish.landDirOnce(java.nio.file.Paths.get(outDir, s"epoch=$epochId")) { tmp =>
+      partials(batch).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }.isDefined
 
   /** Start maintaining the dashboard state from a STREAMING
     * `(source, lang, text)` frame. */

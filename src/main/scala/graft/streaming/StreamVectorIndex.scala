@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.VectorQueries
 import graft.snapshot.ShardedExport
+import graft.storage.Publish
 
 /** Continuous IVF index maintenance: vectors arriving on a stream are
   * assigned to their nearest coarse centroid with the SAME broadcast +
@@ -120,15 +121,8 @@ object StreamVectorIndex {
     else None
   }
 
-  private[graft] def writeGenPointer(root: String, gen: Long): Unit = {
-    val dir = java.nio.file.Paths.get(root)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve("_current_gen.tmp")
-    java.nio.file.Files.writeString(tmp, gen.toString)
-    java.nio.file.Files.move(tmp, dir.resolve("_current_gen"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[graft] def writeGenPointer(root: String, gen: Long): Unit =
+    Publish.replaceFile(java.nio.file.Paths.get(root, "_current_gen"), gen.toString)
 
   /** Build generation `gen` from (corpus, cents): persist the frozen
     * quantizer, land the full assignment as epoch 0 of the new
@@ -146,10 +140,7 @@ object StreamVectorIndex {
     if (!java.nio.file.Files.exists(baseline)) {
       val counts = manifest(dir).toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-      val tmp = baseline.resolveSibling("_baseline.json.tmp")
-      java.nio.file.Files.writeString(tmp, counts)
-      java.nio.file.Files.move(tmp, baseline,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Publish.createFileOnce(baseline, counts)
     }
   }
 
@@ -216,18 +207,12 @@ object StreamVectorIndex {
     val cur = currentGen(root).getOrElse(return Nil)
     val rootPath = java.nio.file.Paths.get(root)
     if (!java.nio.file.Files.isDirectory(rootPath)) return Nil
-    val gens = scala.util.Using.resource(java.nio.file.Files.list(rootPath)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.toList
-        .filter(p => java.nio.file.Files.isDirectory(p))
-        .flatMap(p => "gen=(\\d+)".r.findFirstMatchIn(p.getFileName.toString)
-          .map(_.group(1).toLong))
-    }
+    val gens = Publish.listDir(rootPath)
+      .filter(p => java.nio.file.Files.isDirectory(p))
+      .flatMap(p => "gen=(\\d+)".r.findFirstMatchIn(p.getFileName.toString)
+        .map(_.group(1).toLong))
     val doomed = gens.filter(_ < cur - keep).sorted
-    doomed.foreach { g =>
-      graft.snapshot.ShardedExport.deleteRecursively(
-        java.nio.file.Paths.get(genDir(root, g)))
-    }
+    doomed.foreach(g => Publish.deleteRecursively(java.nio.file.Paths.get(genDir(root, g))))
     doomed
   }
 

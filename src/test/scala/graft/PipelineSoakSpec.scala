@@ -56,7 +56,7 @@ class PipelineSoakSpec extends AnyFunSuite {
         .getOrElse(sys.error(s"no part file under $tmpDir"))
     }
     Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
-    graft.snapshot.ShardedExport.deleteRecursively(tmpDir)
+    graft.storage.Publish.deleteRecursively(tmpDir)
   }
 
   /** Drive a (possibly crashing) streaming query to drain: on each

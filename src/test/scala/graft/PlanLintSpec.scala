@@ -22,6 +22,19 @@ class PlanLintSpec extends AnyFunSuite {
   lazy val spark = GraftSession.build(4, "plan-lint-spec")
   private val sf = "/root/testdata/sf0.01"
 
+  /** Every main source file: path relative to `src/main/scala/graft` →
+    * its text. The source-level inventories below walk this. */
+  private lazy val mainSources: Map[String, String] = {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
+        .toMap
+    }
+  }
+
   test("canary: a corpus-by-corpus cartesian product fires the lint") {
     val bad = spark.range(500).crossJoin(spark.range(500).withColumnRenamed("id", "id2"))
     val vs = PlanLint.lint("canary_cartesian", bad)
@@ -105,9 +118,9 @@ class PlanLintSpec extends AnyFunSuite {
         "layout boundary stats and file lists — O(buckets|files), metadata not data"),
       "snapshot/DataLayout.scala" -> (2 ->
         "z-order boundary stats — O(buckets)"),
-      "snapshot/ShardedExport.scala" -> (2 ->
+      "snapshot/ShardedExport.scala" -> (1 ->
         "per-shard row counts for the commit manifest — ≤ numShards rows"),
-      "streaming/StreamShardedExport.scala" -> (2 ->
+      "streaming/StreamShardedExport.scala" -> (1 ->
         "per-shard counts of the tmp write for marker publication — ≤ numShards rows"),
       "streaming/IncrementalPipeline.scala" -> (2 ->
         "distinct CDC file paths per trigger — ≤ files/trigger at the 64 MiB file cap, never row data"),
@@ -125,23 +138,28 @@ class PlanLintSpec extends AnyFunSuite {
         "learned merge table — vocab-sized model state"),
       "merge/TableDiff.scala" -> (1 ->
         "per-bucket (rows, hashsum) summaries — N_buckets rows by construction"))
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val found = scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .map { p =>
-          root.relativize(p).toString ->
-            pattern.findAllIn(java.nio.file.Files.readString(p)).size
-        }
-        .filter(_._2 > 0).toMap
-    }
+    val found = mainSources.map { case (f, text) => f -> pattern.findAllIn(text).size }
+      .filter(_._2 > 0)
     val unjustified = found.filterNot { case (f, n) => justified.get(f).exists(_._1 == n) }
     assert(unjustified.isEmpty,
       "collect sites without a current justification (new site, or count drifted — " +
         s"re-argue the bounded term in PlanLintSpec): $unjustified")
     val stale = justified.keys.filterNot(found.contains)
     assert(stale.isEmpty, s"stale collect justifications (sites removed): $stale")
+  }
+
+  test("one publish seam: atomic renames, links and recursive deletes only in the storage module") {
+    // every exactly-once land rests on these three host operations; a
+    // hand-rolled copy outside `storage/Publish.scala` is a commit
+    // protocol an object-store backend would silently miss
+    val pattern = """ATOMIC_MOVE|Files\.createLink|def deleteRecursively""".r
+    val outside = mainSources.toSeq.collect {
+      case (f, text) if f != "storage/Publish.scala" && pattern.findFirstIn(text).isDefined =>
+        f -> pattern.findAllIn(text).toSeq.distinct
+    }
+    assert(outside.isEmpty, s"publish primitives outside storage/Publish.scala: $outside")
+    assert(pattern.findAllIn(mainSources("storage/Publish.scala")).nonEmpty,
+      "the storage module must still own the primitives the lint hunts")
   }
 
   test("every registered query's executed plan lints clean at sf0.01") {

@@ -477,12 +477,12 @@ class StreamingPipelineSpec extends AnyFunSuite {
     val t = new TargetTable(spark, root, Seq("k"), 4)
     t.writeVersion(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), "v0")
 
-    // writeVersion gap: full image written under .tmp_, no swap
+    // writeVersion gap: full image written under a hidden tmp, no swap
     Failpoints.arm("target.before-move")
     intercept[Failpoints.InjectedCrash] {
       t.writeVersion(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v"), "v1")
     }
-    assert(Files.exists(Paths.get(root, ".tmp_v1")),
+    assert(graft.storage.Publish.tmpsOf(Paths.get(root), "data_v1").nonEmpty,
       "fixture: the crash must land after the tmp write")
     assert(!t.hasVersion("v1"), "an unswapped tmp must not read as a version")
     assert(t.read().as[(Long, String)].collect().toSet ==
@@ -883,6 +883,30 @@ class StreamingPipelineSpec extends AnyFunSuite {
       TableDefJson.write(defV400.copy(columns = defV400.columns.tail))) // tampered content
     val e3 = intercept[RuntimeException](SchemaRegistry.loadFromDir(s"$root/increment", "tpch", "orders"))
     assert(e3.getMessage.contains("checksum"))
+  }
+
+  test("registry walk survives a file vanishing mid-walk") {
+    // a publisher's tmp renamed away or a retention delete: the entry is
+    // listed, then gone before the walk reads its attributes
+    val root = Files.createTempDirectory("graft-vanish").toString
+    writeFixtures(root)
+    val dateDir = Paths.get(PathCodec.dmlPath(s"$root/increment",
+      PathCodec.DmlPathKey("tpch", "orders", 100L, 0L, "2024-01-01"), 1L)).getParent
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val churn = new Thread(() => {
+      val tmp = dateDir.resolve("CDC000003.csv.tmp")
+      while (!stop.get()) {
+        Files.write(tmp, Array[Byte]('\n'))
+        Files.delete(tmp)
+      }
+    })
+    churn.start()
+    val walks =
+      try (1 to 20).map(_ => scala.util.Try(
+        SchemaRegistry.loadFromDir(s"$root/increment", "tpch", "orders").map(_.versions)))
+      finally { stop.set(true); churn.join() }
+    assert(walks.forall(_ == scala.util.Success(Some(Seq(100L)))),
+      s"walks failed while a file came and went: ${walks.filter(_.isFailure).take(3)}")
   }
 
   test("quarantine lane: corrupt CDC rows land as dead letters and the trigger COMPLETES; without it the FAILFAST contract holds") {
