@@ -1,5 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.{AuditMetrics, ScaleAudit}
+
+/** The one measurement harness: times every registered query (or the
+  * `SPARK_GRAFT_QUERIES` subset plus [[Bench.Controls]]) and records,
+  * per query, the median seconds, every rep's seconds when
+  * `SPARK_GRAFT_RUNS` > 1, and the job/stage/task/byte counters of one
+  * execution from [[graft.tools.ScaleAudit.measure]]. */
 object Bench {
 
   /** Fixed control queries for solo re-measures: structurally diverse
@@ -28,14 +36,70 @@ object Bench {
     if (controlRatios.isEmpty) 1.0 else median(controlRatios)
 
   /** Parse (sfDir, name→seconds) out of a bench artifact — the same
-    * one-query-per-line JSON this object writes. */
+    * one-query-per-line JSON this object writes. Only the flat `queries`
+    * object is read: the cost block and the solo report after it carry
+    * numeric pairs of their own. */
   private[graft] def parseTimings(txt: String): (Option[String], Map[String, Double]) = {
     val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
     val qBlock = txt.indexOf("\"queries\"")
-    val body = if (qBlock >= 0) txt.substring(qBlock) else txt
+    val body =
+      if (qBlock < 0) txt
+      else txt.indexOf('}', qBlock) match {
+        case -1 => txt.substring(qBlock)
+        case end => txt.substring(qBlock, end)
+      }
     val m = "\"([a-z0-9_]+)\":([0-9][0-9.eE+-]*)".r.findAllMatchIn(body)
       .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
     (sf, m)
+  }
+
+  /** One query's measurement: the seconds of every rep, and the result
+    * row count and counters of the first. */
+  private[graft] final case class QueryRun(reps: Seq[Double], rows: Long, cost: AuditMetrics)
+
+  /** Time `fn(spark, sfDir).count()` `runs` times; the first execution
+    * runs under [[ScaleAudit.measure]], whose settle wait for the async
+    * listener bus falls outside the timed region. */
+  private[graft] def runQuery(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame, runs: Int): QueryRun = {
+    def rep(): (Double, Long) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      try {
+        val t0 = System.nanoTime()
+        val rows = fn(spark, sfDir).count()
+        ((System.nanoTime() - t0) / 1e9, rows)
+      } finally {
+        // drop intra-query caches so one query's retained blocks can't
+        // GC-pressure the next (measured multi-second timing swings)
+        spark.catalog.clearCache()
+        // localCheckpoint blocks are not CacheManager entries: left to the
+        // ContextCleaner they survive until their frames are GC'd. Drop
+        // exactly the RDDs this rep persisted; one that existed before it
+        // (a prepared index, a caller's frame) keeps its only copy.
+        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!before(id)) rdd.unpersist(blocking = true)
+        }
+        // force the ContextCleaner's hand: broadcasts and shuffle state
+        // are weak-ref-cleaned, and with a large pretouched heap GC may
+        // not run for many queries — accumulated state then bleeds
+        // multi-second noise into later timings (measured ±30% run-to-
+        // run totals). An explicit GC per query costs ~50 ms and pins
+        // each query's timing to a clean block manager.
+        System.gc()
+      }
+    }
+    var first = (0.0, 0L)
+    val cost = ScaleAudit.measure(spark) { first = rep() }
+    QueryRun(first._1 +: Seq.fill(runs - 1)(rep()._1), first._2, cost)
+  }
+
+  /** A query's record in the artifact's `cost` block. */
+  private[graft] def costRecord(r: QueryRun): String = {
+    val c = r.cost
+    val reps = if (r.reps.size > 1) r.reps.mkString(",\"reps\":[", ",", "]") else ""
+    s"""{"rows":${r.rows},"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"input_bytes":${c.input},""" +
+      s""""shuffle_read_bytes":${c.shuffleRead},"shuffle_write_bytes":${c.shuffleWrite},""" +
+      s""""max_task_shuffle_write_bytes":${c.maxTaskSw}$reps}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -76,6 +140,7 @@ object Bench {
     // A failed query must never masquerade as a fast one: failures are
     // excluded from the timing map and reported by name in "errors".
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val costs = scala.collection.mutable.LinkedHashMap[String, String]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Optional comma-separated filter for solo re-measurement — bench
     // numbers taken under concurrent load are noise, so a disputed
@@ -111,23 +176,9 @@ object Bench {
     }
     selected.foreach { case (name, fn) =>
       try {
-        val reps = (1 to runsPerQuery).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val t = (System.nanoTime() - t0) / 1e9
-          // drop intra-query caches so one query's retained blocks can't
-          // GC-pressure the next (measured multi-second timing swings)
-          spark.catalog.clearCache()
-          // force the ContextCleaner's hand: broadcasts and shuffle state
-          // are weak-ref-cleaned, and with a large pretouched heap GC may
-          // not run for many queries — accumulated state then bleeds
-          // multi-second noise into later timings (measured ±30% run-to-
-          // run totals). An explicit GC per query costs ~50 ms and pins
-          // each query's timing to a clean block manager.
-          System.gc()
-          t
-        }
-        timings(name) = median(reps)
+        val r = runQuery(spark, sfDir, fn, runsPerQuery)
+        timings(name) = median(r.reps)
+        costs(name) = costRecord(r)
       } catch {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -202,6 +253,8 @@ object Bench {
       lines ++= timings.map { case (k, v) => s"""  "$k":$v""" }.mkString(",\n")
       lines ++= "\n },\n \"errors\":{\n"
       lines ++= errors.map { case (k, v) => s"""  "$k":"$v"""" }.mkString(",\n")
+      lines ++= "\n },\n \"cost\":{\n"
+      lines ++= costs.map { case (k, v) => s"""  "$k":$v""" }.mkString(",\n")
       lines ++= "\n }"
       soloReport.foreach { r => lines ++= ",\n " + r }
       lines ++= "\n}\n"
@@ -260,8 +313,8 @@ object Bench {
     // written verbatim to a fixed path that survives whatever stdout
     // framing the launcher adds — if the driver's tail/parse ever misses
     // the stdout line again, the same JSON is one `cat bench/last_line.json`
-    // away (deliberately NOT gitignored and NOT committed: a plain
-    // driver-run artifact, like bench/runs/).
+    // away (a plain run artifact like bench/runs/: gitignored, never
+    // committed).
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench/last_line.json"),
       (compact + "\n").getBytes("UTF-8"))

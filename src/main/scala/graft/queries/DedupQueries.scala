@@ -97,9 +97,12 @@ object DedupQueries {
     // majority of 3-gram shingles) therefore never needs its df attached:
     // instead of joining the FULL exploded stream to dfreq and re-grouping
     // it by doc (two corpus-sized exchanges), join only the df>=2 slice —
-    // a vocabulary-of-duplicates-sized table the planner broadcasts (and
-    // at scale Bloom-prunes, guide §3.2), so the exploded stream never
-    // crosses an exchange at all (guide §2.3/§2.4).
+    // a vocabulary-of-duplicates-sized table. dfreq2 is a shuffle
+    // aggregate with no size estimate at planning time, so the plan does
+    // not guarantee a broadcast: AQE typically broadcasts it at runtime
+    // once its real size is known, and then the exploded stream does not
+    // cross an exchange for this join (guide §2.3/§2.4); a skewed corpus
+    // with a large duplicate vocabulary may keep the shuffle join.
     //
     // Prefix membership is still decided by each doc's FULL (df, sh)
     // ascending order. All df=1 shingles sort before all df>=2 ones, so

@@ -201,11 +201,14 @@ object PlanLint {
     lintPlan(name, executedPlan(df))
 
   /** Ad-hoc report over all (or selected) registered queries:
-    * `runMain graft.tools.PlanLint [sfDir] [q1,q2,...]`. */
+    * `runMain graft.tools.PlanLint [sfDir] [q1,q2,...]`. With a query
+    * list, each named query's formatted executed plan is printed above
+    * its violations. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val which = if (args.length > 1) args(1).split(",").toSet else Set.empty[String]
-    val spark = graft.GraftSession.build(8, "graft-plan-lint")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.GraftSession.build(cpus, "graft-plan-lint")
     graft.Tables.prepareAll(spark, sfDir)
     var bad = 0
     graft.SparkEntry.queries
@@ -213,8 +216,13 @@ object PlanLint {
       .toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
         val vs =
-          try lint(name, fn(spark, sfDir))
-          catch { case e: Throwable => Seq(Violation(name, "error", "-", e.toString.take(160))) }
+          try {
+            val df = fn(spark, sfDir)
+            val plan = executedPlan(df)
+            if (which.nonEmpty)
+              println(s"\n===== $name =====\n" + df.queryExecution.explainString(FormattedMode))
+            lintPlan(name, plan)
+          } catch { case e: Throwable => Seq(Violation(name, "error", "-", e.toString.take(160))) }
         vs.foreach { v =>
           val just = Justified.get((v.query, v.rule)).map(j => s" [justified: $j]").getOrElse("")
           println(v.toString + just)

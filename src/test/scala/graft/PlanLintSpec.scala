@@ -162,6 +162,24 @@ class PlanLintSpec extends AnyFunSuite {
       "the storage module must still own the primitives the lint hunts")
   }
 
+  test("one measurement harness: one SparkListener, and no hard-coded session core count") {
+    // every per-query counter comes from `ScaleAudit.measure`; a second
+    // listener is a second, differently defined set of numbers, and a
+    // literal core count is a session that ignores SPARK_GRAFT_CPUS
+    val listener = """(new|extends)\s+SparkListener\b""".r
+    val listeners = mainSources.toSeq.collect {
+      case (f, text) if f != "tools/ScaleAudit.scala" && listener.findFirstIn(text).isDefined => f
+    }
+    assert(listeners.isEmpty, s"SparkListener implementations outside tools/ScaleAudit.scala: $listeners")
+    assert(listener.findAllIn(mainSources("tools/ScaleAudit.scala")).size == 1,
+      "tools/ScaleAudit.scala must hold exactly one SparkListener")
+    val literalCores = """GraftSession\.build\(\s*\d""".r
+    val pinned = mainSources.toSeq.collect {
+      case (f, text) if literalCores.findFirstIn(text).isDefined => f
+    }
+    assert(pinned.isEmpty, s"GraftSession.build with a literal core count: $pinned")
+  }
+
   test("every registered query's executed plan lints clean at sf0.01") {
     Tables.prepareAll(spark, sf)
     val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

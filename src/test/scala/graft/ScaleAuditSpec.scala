@@ -36,7 +36,8 @@ class ScaleAuditSpec extends AnyFunSuite {
   private val MB = 1048576.0
 
   // (query, shuffleWrite ceiling MB, maxTaskSw ceiling MB) — measured
-  // at sf0.01 (2026-08, ScaleAudit main): sw 0.0-1.1 MB, maxTaskSw
+  // at sf0.01 (2026-08, `ScaleAudit.measure`; re-read them from the cost
+  // block of a `graft.Bench` run): sw 0.0-1.1 MB, maxTaskSw
   // ≤ 0.5 MB across all twelve. Raise a ceiling ONLY with a plan-level
   // justification in the commit message, never to make a red bar green.
   private val ceilings: Seq[(String, Double, Double)] = Seq(
