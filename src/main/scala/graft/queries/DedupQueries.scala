@@ -1421,9 +1421,9 @@ object DedupQueries {
     spanSegs(spanDocs(corpus)).select(col("seg")).distinct()
 
   /** Core of [[dedupSpanIncremental]] over any `(doc_id, text)` batch
-    * vs a distinct corpus span frame (`seg`) — also the streaming
-    * face's per-micro-batch backend (`graft.streaming.StreamSpanStrip`),
-    * so stream ≡ batch by construction. */
+    * vs a distinct corpus span frame (`seg`, [[corpusSpanSet]]) — also
+    * the per-micro-batch function a stream runs through
+    * `graft.streaming.MicroBatch`, so stream ≡ batch by construction. */
   def spanStripAgainst(batch: DataFrame, corpusSegs: DataFrame): DataFrame = {
     val tokenized = spanDocs(batch)
     val fresh = spanSegs(tokenized).join(corpusSegs, Seq("seg"), "left_anti")

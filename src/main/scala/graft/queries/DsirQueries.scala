@@ -146,8 +146,8 @@ object DsirQueries {
   }
 
   /** Score a `(doc_id, lang, text)` frame against a PRETRAINED model —
-    * the apply half of the split [[graft.streaming.StreamDsirScore]]
-    * runs per micro-batch. Tokens hashing to buckets the training
+    * the apply half of the split, run per micro-batch through
+    * [[graft.streaming.MicroBatch]]. Tokens hashing to buckets the training
     * corpus never populated take the smoothed fallback weight via the
     * left join, so out-of-corpus text is scored, not dropped. */
   def scoreWithDsir(batch: DataFrame, m: DsirModel): DataFrame =

@@ -114,9 +114,9 @@ object QualityQueries {
 
   /** (dim, cnt) hashed token counts — the drift feature extraction,
     * shared by the batch query's populations, the nightly-trained
-    * baseline, and the streaming monitor
-    * ([[graft.streaming.StreamDrift]]). */
-  private[graft] def dimCounts(docs: DataFrame): DataFrame = docs
+    * baseline, and the streaming monitor (per micro-batch through
+    * [[graft.streaming.MicroBatch]], scored with [[chi2Against]]). */
+  def dimCounts(docs: DataFrame): DataFrame = docs
     .select(explode_outer(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
     .filter(col("tok").isNotNull)
     .select(pmod(conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long"),
@@ -128,7 +128,7 @@ object QualityQueries {
     * [[corpusDrift]] runs, factored so batch and stream score through
     * one definition. Dims present on only one side count 0 on the
     * other (a NEW token bucket is maximal drift signal, not a crash). */
-  private[graft] def chi2Against(obs: DataFrame, base: DataFrame): DataFrame = {
+  def chi2Against(obs: DataFrame, base: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val dec = DecimalType(38, 0)
     val joined = obs.select(col("dim"), col("cnt").as("o1"))

@@ -1180,7 +1180,8 @@ object TextQueries {
   /** The trained quality-gate model as deployable state: the ClsDims-row
     * weight frame plus three scalars — what a nightly training job
     * persists and the streaming scorer broadcasts
-    * ([[graft.streaming.StreamClassifier]]). */
+    * ([[scoreWithClassifier]] per micro-batch through
+    * [[graft.streaming.MicroBatch]]). */
   case class ClsModel(weights: DataFrame, posTot: Long, negTot: Long,
       threshold: Double)
 
@@ -1467,8 +1468,8 @@ object TextQueries {
   }
 
   /** Bucket a `(doc_id, lang, text)` frame against a PRETRAINED model —
-    * the apply half [[graft.streaming.StreamCcnetBucket]] runs per
-    * micro-batch. Unseen bigrams/contexts take the smoothed floor via
+    * the apply half a stream runs per micro-batch through
+    * [[graft.streaming.MicroBatch]]. Unseen bigrams/contexts take the smoothed floor via
     * left joins (the `scoreAgainst` shape); a language with no trained
     * vocab scores against `v = 1`, and a language with no cut row
     * buckets `head` — new text is classified, never dropped. */

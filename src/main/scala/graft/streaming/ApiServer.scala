@@ -55,10 +55,11 @@ final class ApiServer(status: StatusApi, metrics: ReplicationMetrics, port: Int 
     }
   }
 
-  /** Prometheus text exposition (format 0.0.4) of every counter in the
+  /** Prometheus text exposition (format 0.0.4) of every cell in the
     * registry, namespaced `graft_` the way the reference namespaces
     * `tidb2dw_` (`pkg/metrics/metrics.go:10-79`): one table-labelled
-    * series per counter plus the `table_num` gauge. */
+    * series per cell plus the `table_num` gauge. A family's `# TYPE` is
+    * how its name is written: `set` → gauge, `add` only → counter. */
   private[streaming] def renderPrometheus: String = {
     def escLabel(s: String): String =
       s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
@@ -68,7 +69,8 @@ final class ApiServer(status: StatusApi, metrics: ReplicationMetrics, port: Int 
         val lines = cells.sortBy(_._2).map { case (_, table, v) =>
           s"""graft_$name{table="${escLabel(table)}"} $v"""
         }
-        (s"# TYPE graft_$name gauge" +: lines).mkString("\n")
+        val kind = if (metrics.isGauge(name)) "gauge" else "counter"
+        (s"# TYPE graft_$name $kind" +: lines).mkString("\n")
       }
     val tableNum = s"# TYPE graft_table_num gauge\ngraft_table_num ${metrics.tables.size}"
     (tableNum +: families).mkString("", "\n", "\n")

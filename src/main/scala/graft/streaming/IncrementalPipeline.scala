@@ -28,9 +28,12 @@ import graft.types.TableDefinition
   *    checkpoint dir replays unprocessed files; merge idempotence makes
   *    re-delivery harmless (M7).
   *
-  * Scale: file listing and CSV parsing are executor-parallel; the only
-  * driver-side work per batch is the distinct-file-path list (one row per
-  * file, thousands at most at a 64 MiB CDC file cap).
+  * Scale: file listing and CSV parsing are executor-parallel. Per batch
+  * the driver collects one row per file (path + dirty flag, thousands at
+  * most at a 64 MiB CDC file cap), and it also walks the table's
+  * `{schema}/{table}` tree twice: the schema-registry load
+  * (`registry()`) and the pending-bytes sum (`walkCdcBytes`). Both walks
+  * are O(retained CDC history), not O(batch) — ROADMAP item 2.
   */
 final case class PipelineConfig(
     incrementRoot: String,
@@ -122,11 +125,19 @@ final class IncrementalPipeline(
 
   /** One micro-batch = the reference's one poll tick (`handleNewFiles`). */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
+    // the one driver probe per batch: one row per FILE — small by
+    // construction (64 MiB cap per CDC file); rows themselves never leave
+    // the executors. A file holding a quote-unbalanced line holds a
+    // record whose quoted field embeds a newline — the line source split
+    // it, so those files (and only those) take the multiLine repair read
+    // in place of their already-streamed lines. No files = empty batch.
+    val fileFlags = batch.groupBy(col("_src_path"))
+      .agg(max(Envelope.quoteUnbalanced(col("value"))).as("dirty"))
+      .collect()
+    if (fileFlags.isEmpty) return
+    val files = fileFlags.map(_.getString(0))
+    val dirtyFiles: Set[String] = fileFlags.filter(_.getBoolean(1)).map(_.getString(0)).toSet
     val reg = registry()
-    // one row per FILE on the driver — small by construction (64 MiB cap
-    // per CDC file); rows themselves never leave the executors.
-    val files = batch.select("_src_path").distinct().collect().map(_.getString(0))
     val byVersion: Seq[(Long, Seq[String])] = files
       .flatMap(p => PathCodec.parse(p) match {
         case PathCodec.DmlFile(k, _, path) if k.schema == cfg.schemaName && k.table == cfg.tableName =>
@@ -135,14 +146,6 @@ final class IncrementalPipeline(
       })
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toSeq
       .sortBy(_._1)
-
-    // files containing a quote-unbalanced line hold a record whose quoted
-    // field embeds a newline — the line source split it, so those files
-    // (and only those) take the multiLine repair read in place of their
-    // already-streamed lines. One tick-sized scan; ≤ |files| rows collect.
-    val dirtyFiles: Set[String] = batch
-      .filter(Envelope.quoteUnbalanced(col("value")))
-      .select("_src_path").distinct().collect().map(_.getString(0)).toSet
 
     var curDef = currentDef(reg)
     byVersion.foreach { case (version, paths) =>

@@ -29,12 +29,21 @@ final class ReplicationMetrics {
   }
 
   private val counters = new ConcurrentHashMap[(String, String), AtomicLong]()
+  // names ever written by `set`; every other name is only `add`ed
+  private val gauges = ConcurrentHashMap.newKeySet[String]()
 
   private def cell(name: String, table: String): AtomicLong =
     counters.computeIfAbsent((name, table), _ => new AtomicLong(0))
 
   def add(name: String, table: String, delta: Long): Unit = cell(name, table).addAndGet(delta)
-  def set(name: String, table: String, value: Long): Unit = cell(name, table).set(value)
+  def set(name: String, table: String, value: Long): Unit = {
+    gauges.add(name)
+    cell(name, table).set(value)
+  }
+
+  /** A name written by `set` is a gauge; one only ever `add`ed is a
+    * monotonic counter. */
+  def isGauge(name: String): Boolean = gauges.contains(name)
   def get(name: String, table: String): Long =
     Option(counters.get((name, table))).map(_.get()).getOrElse(0L)
 

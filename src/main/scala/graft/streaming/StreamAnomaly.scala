@@ -9,7 +9,8 @@ import graft.queries.Analytics
 /** Streaming ingest-drift detection — the continuous face of the batch
   * `events_anomaly` query: hourly per-type volumes z-scored against a
   * baseline trained on the landed log (train nightly in batch, apply
-  * continuously on the stream — the same split as [[StreamLmScore]]).
+  * continuously on the stream — the same split [[MicroBatch]] serves
+  * for the stateless scorers).
   *
   * Spark-first shape:
   *  - The baseline is ONE row per event type holding the hourly-count
@@ -27,7 +28,7 @@ import graft.queries.Analytics
   * Rising anomaly rates on the stream are the operational signal that
   * the baseline no longer matches the ingest (crawl change, upstream
   * outage, duplicate storm) — exactly the drift `oov_bigrams` signals
-  * for [[StreamLmScore]].
+  * for the stream-applied bigram LM ([[graft.queries.TextQueries.scoreAgainst]]).
   */
 object StreamAnomaly {
 
@@ -58,18 +59,18 @@ object StreamAnomaly {
 
   /** Start scoring `events` (a STREAMING frame with a timestamp `ts`
     * and `event_type`): watermarked hourly counts, each batch of closed
-    * windows scored against the static baseline and handed to `sink`. */
-  def scored(events: DataFrame, base: DataFrame, watermark: String = "2 hours")(
-      sink: (DataFrame, Long) => Unit): StreamingQuery =
-    events
+    * windows scored against the static baseline and handed to `sink`.
+    * The window state lives in `checkpoint`. */
+  def scored(events: DataFrame, base: DataFrame, checkpoint: String,
+      watermark: String = "2 hours")(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val counts = events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("event_type"), col("w.start").as("win_start"), col("n"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(scoreAgainst(batch, base), id)
-      }
-      .start()
+    MicroBatch.start(counts, checkpoint) { (batch, id) =>
+      sink(scoreAgainst(batch, base), id)
+    }
+  }
 }

@@ -82,13 +82,8 @@ object StreamAudioDedup {
     * sharded layout, minus payloads fingerprint-matching the corpus. */
   def start(docs: DataFrame, index: DataFrame, outDir: String,
       numShards: Int, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        StreamShardedExport.commitBatch(
-          curateBatch(batch, index), "doc_id", outDir, numShards, id)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpoint) { (batch, id) =>
+      StreamShardedExport.commitBatch(
+        curateBatch(batch, index), "doc_id", outDir, numShards, id)
+    }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.tools.Failpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{TopKAgg, VectorFunctions}
 import graft.queries.RetrievalQueries
@@ -47,22 +46,10 @@ object StreamBitextIndex {
   private def enTable(spark: SparkSession, dir: String, numBuckets: Int) =
     new TargetTable(spark, s"$dir/$EnDir", Seq("a_id"), numBuckets)
 
-  /** Start continuously folding `deDocs` (a STREAMING frame of
-    * (b_id, eb)) into the mining state at `dir`, against the static
-    * `en` frame (a_id, ea). */
-  def start(deDocs: DataFrame, en: DataFrame, dir: String,
-      numBuckets: Int, checkpoint: String): StreamingQuery =
-    deDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, en, dir, numBuckets, id)
-        ()
-      }
-      .start()
-
-  /** Apply one epoch idempotently; returns true if this call committed
-    * new en-side state. */
+  /** Fold one epoch of de docs (b_id, eb) into the mining state at
+    * `dir`, against the static `en` frame (a_id, ea), idempotently — a
+    * stream runs it per epoch through [[MicroBatch.start]]. Returns true
+    * if this call committed new en-side state. */
   def applyBatch(deBatch: DataFrame, en: DataFrame, dir: String,
       numBuckets: Int, epochId: Long): Boolean = {
     if (deBatch.isEmpty) return false

@@ -43,7 +43,7 @@ object StreamCurate {
   /** One micro-batch through the full curation chain — shared by the
     * streaming query and directly callable for stream≡batch assertions.
     * With `model` set, the batch-trained LEARNED gate
-    * ([[TextQueries.ClsModel]] via [[StreamClassifier]]'s scorer) runs
+    * ([[TextQueries.ClsModel]] via [[TextQueries.scoreWithClassifier]]) runs
     * AFTER the rule gate — the modern two-stage shape (cheap rules
     * first, classifier on the survivors); still zero streaming state
     * (one broadcast weight join per micro-batch). */
@@ -120,14 +120,9 @@ object StreamCurate {
       outDir: String, numShards: Int, checkpoint: String,
       model: Option[TextQueries.ClsModel] = None,
       neardup: Option[NearDupIndex] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        StreamShardedExport.commitBatch(
-          curateBatch(batch, block, words, model = model, neardup = neardup),
-          "doc_id", outDir, numShards, id)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpoint) { (batch, id) =>
+      StreamShardedExport.commitBatch(
+        curateBatch(batch, block, words, model = model, neardup = neardup),
+        "doc_id", outDir, numShards, id)
+    }
 }

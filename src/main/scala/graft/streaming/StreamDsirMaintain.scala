@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.DsirQueries
 
 /** The DSIR importance model maintained CONTINUOUSLY — the ingest-time
-  * training half that pairs with [[StreamDsirScore]]'s apply half:
+  * training half that pairs with the apply half
+  * ([[DsirQueries.scoreWithDsir]] per micro-batch):
   * every micro-batch lands its per-bucket token counts as one bounded
   * partial row set, and the model read merges partials without ever
   * rescanning a document.
@@ -21,38 +21,19 @@ import graft.queries.DsirQueries
   * model-sized, never corpus-sized — and deriving the model is one
   * 4096-key hash agg over the partial table.
   *
-  * Exactly-once without a transactional sink: each epoch's partials
-  * land once under `epoch=<id>` via tmp-write → atomic-rename (the
-  * quarantine protocol); a redelivered micro-batch is skipped, a
-  * crashed attempt only ever exists under a hidden tmp name.
+  * Exactly-once without a transactional sink: a stream lands each
+  * epoch's [[partials]] once through [[MicroBatch.landEpoch]]; a
+  * redelivered micro-batch is skipped, a crashed attempt only ever
+  * exists under a hidden tmp name.
   */
 object StreamDsirMaintain {
 
   /** One micro-batch's partial rows: per-bucket raw/target counts. */
-  private[graft] def partials(batch: DataFrame): DataFrame =
+  def partials(batch: DataFrame): DataFrame =
     DsirQueries.bucketedTokens(batch)
       .groupBy(col("b"))
       .agg(count(lit(1)).as("r_cnt"),
         sum(when(col("lang") === DsirQueries.TargetLang, 1L).otherwise(0L)).as("t_cnt"))
-
-  /** Land one epoch's partials idempotently; true if this call wrote. */
-  private[graft] def commitEpoch(batch: DataFrame, outDir: String, epochId: Long): Boolean =
-    graft.storage.Publish.landDirOnce(java.nio.file.Paths.get(outDir, s"epoch=$epochId")) { tmp =>
-      partials(batch).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }.isDefined
-
-  /** Start maintaining the model state from a STREAMING
-    * `(doc_id, lang, text)` frame. */
-  def start(docs: DataFrame, outDir: String,
-      checkpoint: Option[String] = None): StreamingQuery = {
-    val w = docs.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        commitEpoch(batch, outDir, id)
-        ()
-      }
-      .start()
-  }
 
   /** The current model: merge every landed epoch's partials (one
     * bucket-keyed hash agg over model-sized state) and run the shared

@@ -28,7 +28,7 @@ object StreamEnrich {
 
   /** The change stream for `cfg`'s table, envelope-projected and typed,
     * joined `stream.streamKey = dim.dimKey`. Returns a STREAMING frame —
-    * compose further (window aggs, filters) and hand it to writeStream. */
+    * compose further (window aggs, filters) and hand it to a streaming sink. */
   def enriched(
       spark: SparkSession,
       cfg: PipelineConfig,

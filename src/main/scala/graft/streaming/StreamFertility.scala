@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Per-language tokenizer-fertility telemetry maintained CONTINUOUSLY —
   * the streaming face of `text_fertility`. Every component is an exact
@@ -11,15 +10,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * order — no sketches needed, the simplest possible mergeable state.
   *
   * Exactly-once via the partial-table protocol (`StreamSourceStats`):
-  * each epoch lands one ≤ |languages|-row partial set under
-  * `epoch=<id>` through tmp-write → atomic-rename; a redelivered
-  * micro-batch is skipped. The dashboard read is one hash agg over the
-  * metadata-sized partial table — a document is never rescanned.
+  * a stream runs `MicroBatch.start(docs, checkpoint) { (b, id) =>
+  * MicroBatch.landEpoch(partials(b), outDir, id) }`, so each epoch lands
+  * one ≤ |languages|-row partial set once and a redelivered micro-batch
+  * is skipped. The report is one hash agg over the metadata-sized
+  * partial table — a document is never rescanned.
   */
 object StreamFertility {
 
   /** One micro-batch's partials: per-lang exact count/sum rows. */
-  private[graft] def partials(batch: DataFrame): DataFrame =
+  def partials(batch: DataFrame): DataFrame =
     batch
       .select(col("lang"),
         size(graft.queries.TextQueries.toks(col("text"))).cast("long").as("ws"),
@@ -30,26 +30,6 @@ object StreamFertility {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("ws")).as("ws_tokens"),
         sum(col("bpe")).as("bpe_tokens"), sum(col("nc")).as("n_chars"))
-
-  /** Land one epoch's partials idempotently; true if this call wrote. */
-  private[graft] def commitEpoch(batch: DataFrame, outDir: String,
-      epochId: Long): Boolean =
-    graft.storage.Publish.landDirOnce(java.nio.file.Paths.get(outDir, s"epoch=$epochId")) { tmp =>
-      partials(batch).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }.isDefined
-
-  /** Start maintaining the fertility state from a STREAMING
-    * `(lang, text)` frame. */
-  def start(docs: DataFrame, outDir: String,
-      checkpoint: Option[String] = None): StreamingQuery = {
-    val w = docs.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        commitEpoch(batch, outDir, id)
-        ()
-      }
-      .start()
-  }
 
   /** The report: merge every landed epoch's partials and run the
     * `text_fertility` integer chain over the merged sums — bit-equal to

@@ -60,14 +60,9 @@ object StreamGraphIndex {
   def start(vecs: DataFrame, cents: DataFrame, dir: String,
       numBuckets: Int, checkpoint: String): StreamingQuery = {
     val idx = StreamVectorIndex.listIndex(cents) // frozen model, resolved once
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, cents, idx, dir, numBuckets, id)
-        ()
-      }
-      .start()
+    MicroBatch.start(vecs, checkpoint) { (batch, id) =>
+      applyBatch(batch, cents, idx, dir, numBuckets, id)
+    }
   }
 
   /** The batch's cell memberships: `GraphMemb` best cells per vector,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.DoubleType
 
 import graft.functions.TopKAgg
@@ -45,19 +44,8 @@ object StreamLexicalIndex {
 
   private def toksOf = filter(split(col("text"), " "), t => t =!= "")
 
-  /** Start continuously indexing `docs` (a STREAMING frame with
-    * `doc_id` and `text`) into the term-sharded index at `outDir`. */
-  def start(docs: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        commitBatch(batch, outDir, id)
-        ()
-      }
-      .start()
-
-  /** Idempotently tokenize + land one micro-batch of documents; returns
+  /** Idempotently tokenize + land one micro-batch of documents (a
+    * stream runs it per epoch through [[MicroBatch.start]]); returns
     * false if `epochId` was already committed (redelivery no-op). */
   def commitBatch(batch: DataFrame, outDir: String, epochId: Long): Boolean = {
     val base = batch

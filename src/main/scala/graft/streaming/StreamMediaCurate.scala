@@ -62,13 +62,8 @@ object StreamMediaCurate {
   def start(docs: DataFrame, outDir: String, numShards: Int, checkpoint: String,
       clipThreshold: Double = MediaQueries.ClipThreshold,
       neardup: Option[FrameNeardupIndex] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        StreamShardedExport.commitBatch(
-          curateBatch(batch, clipThreshold, neardup), "doc_id", outDir, numShards, id)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpoint) { (batch, id) =>
+      StreamShardedExport.commitBatch(
+        curateBatch(batch, clipThreshold, neardup), "doc_id", outDir, numShards, id)
+    }
 }

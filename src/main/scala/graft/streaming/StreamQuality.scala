@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -36,14 +36,9 @@ object StreamQuality {
       table: String, quarantineDir: String, checkpoint: String)(
       downstream: (DataFrame, Long) => Unit): StreamingQuery = {
     require(rules.nonEmpty, "no rules declared")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        gateBatch(batch, id, rules, metrics, table, quarantineDir)(downstream)
-        ()
-      }
-      .start()
+    MicroBatch.start(stream, checkpoint) { (batch, id) =>
+      gateBatch(batch, id, rules, metrics, table, quarantineDir)(downstream)
+    }
   }
 
   /** One micro-batch through the gate — also the unit the spec drives
@@ -65,17 +60,14 @@ object StreamQuality {
       if (!bad.isEmpty) {
         // dead-letter exactly-once: a redelivered micro-batch after a
         // crash/restart must not append the same violations twice. Each
-        // epoch lands ONCE under its own `epoch=<id>` partition dir via
-        // tmp-write → atomic-rename (`Publish.landDirOnce`): a
-        // completed prior attempt is skipped, a crashed partial attempt
-        // only ever exists under the hidden tmp name readers ignore.
-        graft.storage.Publish.landDirOnce(
-            java.nio.file.Paths.get(quarantineDir, s"epoch=$epochId")) { tmp =>
-          bad
-            .withColumn("_rules_fired", concat_ws(",",
-              rules.map(r => when(coalesce(r.violation, lit(false)), r.name)): _*))
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        }
+        // epoch lands ONCE under its own partition dir
+        // (`MicroBatch.landEpoch`): a completed prior attempt is
+        // skipped, a crashed partial attempt only ever exists under the
+        // hidden tmp name readers ignore.
+        MicroBatch.landEpoch(
+          bad.withColumn("_rules_fired", concat_ws(",",
+            rules.map(r => when(coalesce(r.violation, lit(false)), r.name)): _*)),
+          quarantineDir, epochId)
       }
       downstream(cached.filter(!anyViolation(rules)), epochId)
     } finally {

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.cdc.Envelope
 import graft.snapshot.TargetTable
@@ -53,7 +52,9 @@ object StreamScd2 {
       .drop(Envelope.FlagCol)
   }
 
-  /** Apply one epoch idempotently; returns true if this call committed. */
+  /** Apply one epoch idempotently — the per-micro-batch function a
+    * stream hands to [[MicroBatch.start]]; returns true if this call
+    * committed. */
   def applyBatch(spark: SparkSession, dir: String, batch: DataFrame,
       keyCol: String, numBuckets: Int, epochId: Long): Boolean = {
     if (batch.isEmpty) return false
@@ -95,20 +96,6 @@ object StreamScd2 {
           .otherwise(col(ValidTo)))
       .drop("_first_ts")
     t.mergeVersion(closed.unionByName(newRows), touched, s"e$epochId")
-  }
-
-  /** Start maintaining the history from a STREAMING change frame carrying
-    * `keyCol`, the envelope flag/commit_ts columns, and the payload. */
-  def start(changes: DataFrame, dir: String, keyCol: String,
-      numBuckets: Int = 16, checkpoint: Option[String] = None): StreamingQuery = {
-    val spark = changes.sparkSession
-    val w = changes.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, dir, batch, keyCol, numBuckets, id)
-        ()
-      }
-      .start()
   }
 
   /** The history table as `cdc_scd2` shapes it: version rows with their

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.queries.VectorQueries
 
@@ -14,7 +13,7 @@ import graft.queries.VectorQueries
   *
   * Spark-first shape: the index is two static frames (the model-sized
   * centroid table and the corpus members keyed by centroid), so each
-  * micro-batch runs the batch matcher via `foreachBatch` — broadcast
+  * micro-batch runs [[matchBatch]] through [[MicroBatch.start]] — broadcast
   * centroid assignment (the shared IVF `max_by` hash-agg), one
   * stream-static join against ONLY the matching cluster's members, one
   * bounded best-match agg per new vector. Streaming STATE is zero:
@@ -41,27 +40,10 @@ object StreamSemanticDedup {
     * index: emits `(vec_id, dup_of, sim, n_matches)` — the best landed
     * match at `sim >= threshold` (ties by lowest member id) plus how
     * many members matched. Batch callers and the stream share this
-    * exact chain, so stream ≡ batch by construction. */
-  def matchBatch(batch: DataFrame, idx: SemanticIndex, threshold: Double): DataFrame =
+    * exact chain, so stream ≡ batch by construction. Registers the
+    * `cosine_sim` expression on the batch's session. */
+  def matchBatch(batch: DataFrame, idx: SemanticIndex, threshold: Double): DataFrame = {
+    graft.functions.VectorFunctions.register(batch.sparkSession)
     graft.queries.DedupQueries.semanticMatch(batch, idx.cents, idx.members, threshold)
-
-  /** Start matching `vecs` (a STREAMING `(vec_id, embedding)` frame)
-    * against `idx`; each micro-batch's matches are handed to `sink`.
-    * Registers the `cosine_sim` expression on the batch's session. */
-  def matched(vecs: DataFrame, idx: SemanticIndex, threshold: Double,
-      checkpoint: Option[String] = None)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = vecs.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.VectorFunctions.register(batch.sparkSession)
-        sink(matchBatch(batch, idx, threshold), id)
-      }
-      .start()
   }
-
-  /** Convenience for sessions that have not registered the vector
-    * expressions yet (batch callers). */
-  def register(spark: SparkSession): Unit =
-    graft.functions.VectorFunctions.register(spark)
 }

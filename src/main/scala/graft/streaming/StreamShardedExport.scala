@@ -47,16 +47,11 @@ object StreamShardedExport {
     * redelivered epoch changes nothing a reader can observe. */
   def start(docs: DataFrame, keyCol: String, outDir: String, numShards: Int,
       checkpoint: String, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        commitBatch(batch, keyCol, outDir, numShards, id)
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          compact(batch.sparkSession, outDir, numShards)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpoint) { (batch, id) =>
+      commitBatch(batch, keyCol, outDir, numShards, id)
+      if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
+        compact(batch.sparkSession, outDir, numShards)
+    }
 
   /** Idempotently land one micro-batch: returns true if this call wrote
     * the batch, false if `epochId` was already committed (redelivery, or

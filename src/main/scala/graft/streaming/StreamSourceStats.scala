@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{Kmv, KmvAgg, KmvMergeAgg}
 import graft.queries.TextQueries
@@ -20,10 +19,11 @@ import graft.queries.TextQueries
   * sketch instead (≤ k longs per (source, lang), merge = sorted-distinct
   * merge, exact below capacity, deterministic estimate above it).
   *
-  * Exactly-once without a transactional sink: each epoch's partials land
-  * once under `epoch=<id>` via tmp-write → atomic-rename (the quarantine
-  * protocol) — a redelivered micro-batch is skipped, a crashed attempt
-  * only ever exists under a hidden tmp name. State on disk grows by
+  * Exactly-once without a transactional sink: a stream lands each
+  * epoch's [[partials]] once through [[MicroBatch.landEpoch]] (tmp-write
+  * → atomic rename, the quarantine protocol) — a redelivered
+  * micro-batch is skipped, a crashed attempt only ever exists under a
+  * hidden tmp name. State on disk grows by
   * ≤ |sources × langs| rows per epoch — metadata-sized — and the
   * merge-on-read dashboard is one hash agg over that partial table.
   */
@@ -35,7 +35,7 @@ object StreamSourceStats {
 
   /** One micro-batch's partial rows: per (source, lang) exact sums plus
     * the distinct-fingerprint sketch. */
-  private[graft] def partials(batch: DataFrame): DataFrame = {
+  def partials(batch: DataFrame): DataFrame = {
     val kmv = udaf(new KmvAgg(SketchK))
     batch
       .select(Seq(col("source"), col("lang"),
@@ -46,25 +46,6 @@ object StreamSourceStats {
         sum(col("stop_hits")).as("s_stop"), sum(col("distinct_toks")).as("s_dist"),
         sum(col("alnum_chars")).as("s_alnum"), sum(col("n_chars")).as("s_chars"),
         kmv(col("fph")).as("fp_kmv"))
-  }
-
-  /** Land one epoch's partials idempotently; true if this call wrote. */
-  private[graft] def commitEpoch(batch: DataFrame, outDir: String, epochId: Long): Boolean =
-    graft.storage.Publish.landDirOnce(java.nio.file.Paths.get(outDir, s"epoch=$epochId")) { tmp =>
-      partials(batch).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }.isDefined
-
-  /** Start maintaining the dashboard state from a STREAMING
-    * `(source, lang, text)` frame. */
-  def start(docs: DataFrame, outDir: String,
-      checkpoint: Option[String] = None): StreamingQuery = {
-    val w = docs.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        commitEpoch(batch, outDir, id)
-        ()
-      }
-      .start()
   }
 
   /** The dashboard: merge every landed epoch's partials — long sums add,

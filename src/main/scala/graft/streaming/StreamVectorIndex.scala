@@ -45,14 +45,9 @@ object StreamVectorIndex {
   def start(vecs: DataFrame, cents: DataFrame, outDir: String,
       checkpoint: String): StreamingQuery = {
     val idx = listIndex(cents) // resolve the frozen model once, up front
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        commitBatch(batch, cents, idx, outDir, id)
-        ()
-      }
-      .start()
+    MicroBatch.start(vecs, checkpoint) { (batch, id) =>
+      commitBatch(batch, cents, idx, outDir, id)
+    }
   }
 
   /** Idempotently assign + land one micro-batch of vectors; returns

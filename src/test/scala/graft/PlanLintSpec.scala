@@ -122,8 +122,8 @@ class PlanLintSpec extends AnyFunSuite {
         "per-shard row counts for the commit manifest — ≤ numShards rows"),
       "streaming/StreamShardedExport.scala" -> (1 ->
         "per-shard counts of the tmp write for marker publication — ≤ numShards rows"),
-      "streaming/IncrementalPipeline.scala" -> (2 ->
-        "distinct CDC file paths per trigger — ≤ files/trigger at the 64 MiB file cap, never row data"),
+      "streaming/IncrementalPipeline.scala" -> (1 ->
+        "one (path, dirty) row per CDC file per trigger — ≤ files/trigger at the 64 MiB file cap, never row data"),
       "streaming/StreamVectorIndex.scala" -> (1 ->
         "dense list index of the frozen quantizer — |centroids| longs"),
       "streaming/StreamLexicalIndex.scala" -> (1 ->
@@ -160,6 +160,27 @@ class PlanLintSpec extends AnyFunSuite {
     assert(outside.isEmpty, s"publish primitives outside storage/Publish.scala: $outside")
     assert(pattern.findAllIn(mainSources("storage/Publish.scala")).nonEmpty,
       "the storage module must still own the primitives the lint hunts")
+  }
+
+  test("one micro-batch adapter: writeStream and epoch dirs only in MicroBatch, checkpoints required") {
+    // a face that hand-rolls `writeStream…foreachBatch` is a second
+    // adapter; one that takes an optional checkpoint restarts epoch ids
+    // at 0 on a fresh temp checkpoint, and an epoch-keyed sink then
+    // drops every new batch as a redelivery
+    val adapter = "streaming/MicroBatch.scala"
+    val rules = Seq(
+      ("writeStream", """\bwriteStream\b""".r, Set(adapter, "streaming/IncrementalPipeline.scala")),
+      ("epoch dir", "\"epoch=".r, Set(adapter)),
+      ("optional checkpoint", """checkpoint\w*\s*:\s*Option\[String\]""".r, Set.empty[String]))
+    val offenders = for {
+      (rule, pattern, allowed) <- rules
+      (f, text) <- mainSources.toSeq.sortBy(_._1)
+      if !allowed(f) && pattern.findFirstIn(text).isDefined
+    } yield s"$rule in $f"
+    assert(offenders.isEmpty, s"micro-batch plumbing outside the adapter: $offenders")
+    Seq("""\bwriteStream\b""".r, "\"epoch=".r).foreach { p =>
+      assert(p.findFirstIn(mainSources(adapter)).isDefined, s"the adapter must still own $p")
+    }
   }
 
   test("one measurement harness: one SparkListener, and no hard-coded session core count") {

@@ -44,7 +44,8 @@ class StreamAnomalySpec extends AnyFunSuite {
 
     val input = MemoryStream[Ev]
     val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    val q = StreamAnomaly.scored(input.toDF(), base) { (scored, _) =>
+    val cp = java.nio.file.Files.createTempDirectory("anomaly-cp").toString
+    val q = StreamAnomaly.scored(input.toDF(), base, cp) { (scored, _) =>
       out ++= scored.collect()
     }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.RetrievalQueries
-import graft.streaming.StreamBitextIndex
+import graft.streaming.{MicroBatch, StreamBitextIndex}
 
 /** Continuous bitext-mining state: de docs arriving across micro-batches
   * (with a redelivery) must leave EXACTLY the state a batch build over
@@ -32,10 +32,12 @@ class StreamBitextIndexSpec extends AnyFunSuite {
     val cp = java.nio.file.Files.createTempDirectory("bitext-idx-cp").toString
 
     val input = MemoryStream[(Long, String)]
-    val q = StreamBitextIndex.start(
+    val q = MicroBatch.start(
       input.toDF().toDF("b_id", "text")
-        .select(col("b_id"), RetrievalQueries.bitextEmb(col("text")).as("eb")),
-      en, dir, numBuckets = 2, checkpoint = cp)
+        .select(col("b_id"), RetrievalQueries.bitextEmb(col("text")).as("eb")), cp) {
+      (batch, id) =>
+        StreamBitextIndex.applyBatch(batch, en, dir, numBuckets = 2, id)
+    }
     input.addData(allDe.take(4))
     q.processAllAvailable()
     input.addData(allDe.drop(4))

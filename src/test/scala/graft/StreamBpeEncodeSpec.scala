@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.BpeQueries
-import graft.streaming.StreamBpeEncode
+import graft.streaming.MicroBatch
 
 // top-level: Spark can't encode a case class nested inside the suite
 case class BpeDoc(doc_id: Long, text: String)
@@ -27,9 +27,10 @@ class StreamBpeEncodeSpec extends AnyFunSuite {
 
     val input = MemoryStream[BpeDoc]
     val got = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    val q = StreamBpeEncode.encoded(input.toDF(), merges) { (batch, _) =>
-      got ++= batch.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      ()
+    val cp = java.nio.file.Files.createTempDirectory("bpe-encode-cp").toString
+    val q = MicroBatch.start(input.toDF(), cp) { (batch, _) =>
+      got ++= BpeQueries.encodeCorpus(batch, merges).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     }
     try {
       input.addData(docs.take(60))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
-import graft.streaming.StreamCcnetBucket
+import graft.streaming.MicroBatch
 
 /** Stream ≡ batch for CCNet bucketing: documents bucketed in-flight
   * against the pretrained per-language LM + cuts must get exactly the
@@ -63,8 +63,9 @@ class StreamCcnetBucketSpec extends AnyFunSuite {
     val (h1, h2) = rows.splitAt(rows.length / 2)
     val input = MemoryStream[(Long, String, String)]
     val collected = mutable.ArrayBuffer[Row]()
-    val q = StreamCcnetBucket.bucketed(
-      input.toDF().toDF("doc_id", "lang", "text"), model) { (b, _) =>
+    val cp = java.nio.file.Files.createTempDirectory("ccnet-bucket-cp").toString
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "lang", "text"), cp) { (batch, _) =>
+      val b = TextQueries.bucketAgainst(batch, model)
       collected.synchronized { collected ++= b.collect() }
     }
     input.addData(h1.toSeq: _*); q.processAllAvailable()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
-import graft.streaming.StreamClassifier
+import graft.streaming.MicroBatch
 
 /** Stream ≡ batch for the quality-classifier gate: documents scored
   * in-flight against the pretrained linear model must get bit-for-bit
@@ -44,8 +44,9 @@ class StreamClassifierSpec extends AnyFunSuite {
     val (h1, h2) = rows.splitAt(rows.length / 2)
     val input = MemoryStream[(Long, String)]
     val collected = mutable.ArrayBuffer[Row]()
-    val q = StreamClassifier.scored(
-      input.toDF().toDF("doc_id", "text"), model) { (scored, _) =>
+    val cp = java.nio.file.Files.createTempDirectory("classifier-cp").toString
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "text"), cp) { (batch, _) =>
+      val scored = TextQueries.scoreWithClassifier(batch, model)
       collected.synchronized { collected ++= scored.collect() }
     }
     input.addData(h1.toSeq: _*); q.processAllAvailable()

@@ -6,7 +6,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamDrift
+import graft.queries.QualityQueries
+import graft.streaming.MicroBatch
 
 /** Stream ≡ batch for drift scoring, and the monitor actually ALARMS:
   * an in-distribution micro-batch scores a low Σχ² against the trained
@@ -22,7 +23,7 @@ class StreamDriftSpec extends AnyFunSuite {
   test("in-stream chi2 equals batch chi2; shifted vocabulary alarms") {
     implicit val sqlCtx = spark.sqlContext
     val docs = Tables.load(spark, sfDir, "documents")
-    val base = StreamDrift.baseline(docs).cache()
+    val base = QualityQueries.dimCounts(docs).cache()
 
     // batch 1: a slice of the training corpus (in-distribution);
     // batch 2: the same slice with an out-of-vocabulary token storm
@@ -34,8 +35,12 @@ class StreamDriftSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val perBatch = mutable.Map[Long, Array[Row]]()
-    val q = StreamDrift.scored(input.toDF().toDF("doc_id", "text"), base) {
-      (scored, id) => perBatch.synchronized { perBatch(id) = scored.collect() }
+    def scoreBatch(batch: org.apache.spark.sql.DataFrame) =
+      QualityQueries.chi2Against(QualityQueries.dimCounts(batch), base)
+    val cp = java.nio.file.Files.createTempDirectory("drift-cp").toString
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "text"), cp) { (batch, id) =>
+      val scored = scoreBatch(batch)
+      perBatch.synchronized { perBatch(id) = scored.collect() }
     }
     input.addData(inDist.toSeq: _*); q.processAllAvailable()
     input.addData(shifted.toSeq: _*); q.processAllAvailable()
@@ -45,8 +50,7 @@ class StreamDriftSpec extends AnyFunSuite {
     assert(perBatch.keySet == Set(0L, 1L), s"epochs: ${perBatch.keySet}")
 
     // stream ≡ batch on the same rows
-    val batchScored = StreamDrift.scoreBatch(
-      inDist.toSeq.toDF("doc_id", "text"), base).collect()
+    val batchScored = scoreBatch(inDist.toSeq.toDF("doc_id", "text")).collect()
     val streamMap = perBatch(0L).map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     val batchMap = batchScored.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(streamMap == batchMap, "stream and batch chi2 diverge")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.DsirQueries
-import graft.streaming.StreamDsirMaintain
+import graft.streaming.{MicroBatch, StreamDsirMaintain}
 
 /** Continuously-maintained DSIR model ≡ batch-trained model: because
   * bucket counts are associative long sums and the weight chain is
@@ -31,7 +31,10 @@ class StreamDsirMaintainSpec extends AnyFunSuite {
 
     val outDir = Files.createTempDirectory("dsir-maintain").toString
     val input = MemoryStream[(Long, String, String)]
-    val q = StreamDsirMaintain.start(input.toDF().toDF("doc_id", "lang", "text"), outDir)
+    val cp = Files.createTempDirectory("dsir-maintain-cp").toString
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "lang", "text"), cp) { (batch, id) =>
+      MicroBatch.landEpoch(StreamDsirMaintain.partials(batch), outDir, id)
+    }
     input.addData(h1.toSeq: _*); q.processAllAvailable()
     input.addData(h2.toSeq: _*); q.processAllAvailable()
     q.stop()
@@ -54,9 +57,10 @@ class StreamDsirMaintainSpec extends AnyFunSuite {
     val outDir = Files.createTempDirectory("dsir-redeliver").toString
     val batch = Seq((0L, "en", "a b c"), (1L, "fr", "d e f"))
       .toDF("doc_id", "lang", "text")
-    assert(StreamDsirMaintain.commitEpoch(batch, outDir, 0L))
+    assert(MicroBatch.landEpoch(StreamDsirMaintain.partials(batch), outDir, 0L))
     val once = weightsOf(StreamDsirMaintain.model(spark, outDir))
-    assert(!StreamDsirMaintain.commitEpoch(batch, outDir, 0L), "redelivery must not write")
+    assert(!MicroBatch.landEpoch(StreamDsirMaintain.partials(batch), outDir, 0L),
+      "redelivery must not write")
     assert(weightsOf(StreamDsirMaintain.model(spark, outDir)) == once,
       "redelivered epoch changed the model")
   }

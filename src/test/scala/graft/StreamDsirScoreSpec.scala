@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.DsirQueries
-import graft.streaming.StreamDsirScore
+import graft.streaming.MicroBatch
 
 /** Stream ≡ batch for DSIR importance scoring: documents scored
   * in-flight against the pretrained hashed-n-gram model must get
@@ -59,8 +59,9 @@ class StreamDsirScoreSpec extends AnyFunSuite {
     val (h1, h2) = rows.splitAt(rows.length / 2)
     val input = MemoryStream[(Long, String, String)]
     val collected = mutable.ArrayBuffer[Row]()
-    val q = StreamDsirScore.scored(
-      input.toDF().toDF("doc_id", "lang", "text"), model) { (scored, _) =>
+    val cp = java.nio.file.Files.createTempDirectory("dsir-score-cp").toString
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "lang", "text"), cp) { (batch, _) =>
+      val scored = DsirQueries.scoreWithDsir(batch, model)
       collected.synchronized { collected ++= scored.collect() }
     }
     input.addData(h1.toSeq: _*); q.processAllAvailable()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.RetrievalQueries
-import graft.streaming.{StreamLexicalIndex, StreamShardedExport}
+import graft.streaming.{MicroBatch, StreamLexicalIndex, StreamShardedExport}
 
 /** Continuous lexical-index maintenance: serving from a live-streamed
   * index must be BIT-EQUAL to the oracle-gated batch BM25 query, land
@@ -30,7 +30,9 @@ class StreamLexicalIndexSpec extends AnyFunSuite {
     val rows = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)]
-    val q = StreamLexicalIndex.start(input.toDF().toDF("doc_id", "text"), out, cp)
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "text"), cp) { (batch, id) =>
+      StreamLexicalIndex.commitBatch(batch, out, id)
+    }
     (0 until chunks).foreach { c =>
       input.addData(rows.filter(_._1 % chunks == c).toSeq: _*)
       q.processAllAvailable()

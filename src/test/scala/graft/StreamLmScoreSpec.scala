@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
-import graft.streaming.StreamLmScore
+import graft.streaming.MicroBatch
 
 /** Stream ≡ batch for LM scoring: documents scored in-flight against a
   * pretrained model must get bit-for-bit the scores the batch scorer
@@ -31,8 +31,9 @@ class StreamLmScoreSpec extends AnyFunSuite {
     // stream: one doc of in-model text, one with out-of-model bigrams
     val input = MemoryStream[(Long, String)]
     val collected = mutable.ArrayBuffer[Row]()
-    val q = StreamLmScore.scored(
-      input.toDF().toDF("doc_id", "text"), model) { (scored, _) =>
+    val cp = java.nio.file.Files.createTempDirectory("lm-score-cp").toString
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "text"), cp) { (batch, _) =>
+      val scored = TextQueries.scoreAgainst(batch, model)
       collected.synchronized { collected ++= scored.collect() }
     }
     input.addData((1L, "the quick fox jumps"))

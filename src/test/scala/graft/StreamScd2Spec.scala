@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CdcQueries
-import graft.streaming.StreamScd2
+import graft.streaming.{MicroBatch, StreamScd2}
 
 // top-level: Spark can't encode a case class nested inside the suite
 case class Scd2Chg(o_orderkey: Long, o_orderstatus: String,
@@ -42,7 +42,10 @@ class StreamScd2Spec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("scd2").toString
     val input = MemoryStream[Scd2Chg]
-    val q = StreamScd2.start(input.toDF(), dir, "o_orderkey", numBuckets = 8)
+    val cp = Files.createTempDirectory("scd2-cp").toString
+    val q = MicroBatch.start(input.toDF(), cp) { (batch, id) =>
+      StreamScd2.applyBatch(spark, dir, batch, "o_orderkey", 8, id)
+    }
     try {
       (1L to 3L).foreach { ts =>
         input.addData(log.filter(_.tidb2dw_commit_ts == ts))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamSemanticDedup
+import graft.streaming.{MicroBatch, StreamSemanticDedup}
 
 // top-level: Spark can't encode a case class nested inside the suite
 case class SemVec(vec_id: Long, embedding: Array[Float])
@@ -20,7 +20,7 @@ class StreamSemanticDedupSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val corpus = {
-    StreamSemanticDedup.register(spark)
+    graft.functions.VectorFunctions.register(spark)
     Tables.load(spark, sf, "embeddings").cache()
   }
   private lazy val idx = StreamSemanticDedup.buildIndex(corpus)
@@ -50,11 +50,10 @@ class StreamSemanticDedupSpec extends AnyFunSuite {
     val rows = resubmissions.as[SemVec].collect().toSeq
     val input = MemoryStream[SemVec]
     val got = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Long)]()
-    val q = StreamSemanticDedup.matched(input.toDF(), idx, threshold = 0.5) {
-      (batch, _) =>
-        got ++= batch.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        ()
+    val cp = java.nio.file.Files.createTempDirectory("semdedup-cp").toString
+    val q = MicroBatch.start(input.toDF(), cp) { (batch, _) =>
+      got ++= StreamSemanticDedup.matchBatch(batch, idx, threshold = 0.5).collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     }
     try {
       input.addData(rows.take(rows.size / 2))

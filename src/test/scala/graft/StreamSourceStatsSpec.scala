@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.CurationQueries
-import graft.streaming.StreamSourceStats
+import graft.streaming.{MicroBatch, StreamSourceStats}
 
 // top-level: Spark can't encode a case class nested inside the suite
 case class SrcDoc(source: String, lang: String, text: String)
@@ -29,7 +29,10 @@ class StreamSourceStatsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("srcstats").toString
     val input = MemoryStream[SrcDoc]
-    val q = StreamSourceStats.start(input.toDF(), dir)
+    val cp = Files.createTempDirectory("srcstats-cp").toString
+    val q = MicroBatch.start(input.toDF(), cp) { (batch, id) =>
+      MicroBatch.landEpoch(StreamSourceStats.partials(batch), dir, id)
+    }
     try {
       input.addData(docs.take(docs.size / 3))
       q.processAllAvailable()
@@ -63,9 +66,10 @@ class StreamSourceStatsSpec extends AnyFunSuite {
   test("a redelivered epoch is skipped and changes nothing") {
     val dir = Files.createTempDirectory("srcstats2").toString
     val slice = docs.take(40).toDF()
-    assert(StreamSourceStats.commitEpoch(slice, dir, 0L))
+    assert(MicroBatch.landEpoch(StreamSourceStats.partials(slice), dir, 0L))
     val before = StreamSourceStats.dashboard(spark, dir).collect().toSeq
-    assert(!StreamSourceStats.commitEpoch(slice, dir, 0L), "redelivered epoch landed twice")
+    assert(!MicroBatch.landEpoch(StreamSourceStats.partials(slice), dir, 0L),
+      "redelivered epoch landed twice")
     val after = StreamSourceStats.dashboard(spark, dir).collect().toSeq
     assert(before == after)
   }

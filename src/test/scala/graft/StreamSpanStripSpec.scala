@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamSpanStrip
+import graft.queries.DedupQueries
+import graft.streaming.MicroBatch
 
 // top-level: Spark can't encode a case class nested inside the suite
 case class SpanDoc(doc_id: Long, text: String)
@@ -20,7 +21,7 @@ class StreamSpanStripSpec extends AnyFunSuite {
 
   // SpanW = 5 → each 10-word text is exactly two spans
   private val corpusText = "a b c d e f g h i j"
-  private lazy val index = StreamSpanStrip.buildIndex(
+  private lazy val index = DedupQueries.corpusSpanSet(
     Seq(SpanDoc(101, corpusText)).toDF())
 
   private val freshText = "y1 y2 y3 y4 y5 y6 y7 y8 y9 y10"
@@ -34,7 +35,7 @@ class StreamSpanStripSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
 
   test("batch core: corpus spans stripped, intra-batch firsts win") {
-    val got = collect(StreamSpanStrip.stripBatch(batch1.toDF(), index)).sortBy(_._1)
+    val got = collect(DedupQueries.spanStripAgainst(batch1.toDF(), index)).sortBy(_._1)
     assert(got == Seq(
       (1L, 2L, 0L, ""),                             // every span corpus-seen
       (2L, 2L, 1L, "x1 x2 x3 x4 x5"),               // head stripped, tail kept
@@ -47,9 +48,9 @@ class StreamSpanStripSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[SpanDoc]
     val perBatch = scala.collection.mutable.ArrayBuffer[Seq[(Long, Long, Long, String)]]()
-    val q = StreamSpanStrip.stripped(input.toDF(), index) { (batch, _) =>
-      perBatch += collect(batch)
-      ()
+    val cp = java.nio.file.Files.createTempDirectory("span-strip-cp").toString
+    val q = MicroBatch.start(input.toDF(), cp) { (batch, _) =>
+      perBatch += collect(DedupQueries.spanStripAgainst(batch, index))
     }
     val resend = Seq(SpanDoc(5, freshText)) // doc 3's text again, next batch
     try {
@@ -60,7 +61,7 @@ class StreamSpanStripSpec extends AnyFunSuite {
     } finally q.stop()
     assert(perBatch.size == 2, s"expected 2 micro-batches, got ${perBatch.size}")
     assert(perBatch(0).sortBy(_._1) ==
-      collect(StreamSpanStrip.stripBatch(batch1.toDF(), index)).sortBy(_._1),
+      collect(DedupQueries.spanStripAgainst(batch1.toDF(), index)).sortBy(_._1),
       "micro-batch 1 diverges from the batch core")
     // zero streaming state: the re-sent text is NOT stripped against
     // batch 1 — cross-batch duplicates are the index rebuild's job

@@ -699,6 +699,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       }
       val prom = fetch("/metrics")
       assert(prom.contains("# TYPE graft_table_versions gauge"), prom)
+      assert(prom.contains("# TYPE graft_rows_loaded counter"), prom)
       tables.foreach { t =>
         assert(prom.contains(s"""graft_table_versions{table="$t"} 100"""), prom)
         assert(prom.contains(s"""graft_snapshot_loaded_size{table="$t"}"""), prom)
